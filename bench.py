@@ -191,17 +191,18 @@ def main() -> None:
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo_dir, "BENCH_LOCAL.json"), "w") as f:
         json.dump(full, f, indent=1)
+    print_payload(summary, full)
+    spark.stop()
+
+
+def print_payload(summary: dict, full: dict) -> None:
+    """The stdout contract: the compact summary first, then the full
+    payload as the LAST line. Consumers parse the last line, so it
+    must carry the per-query map (a trailing summary-only line hid
+    all 233 per-query times); ``full`` holds every summary key too,
+    so a captor keeping only the tail still reads the totals."""
     print(json.dumps(summary), flush=True)
     print(json.dumps(full), flush=True)
-    # re-print the compact summary as the LAST line: the driver's
-    # log captor keeps a bounded TAIL of stdout, and the long
-    # full-payload line above can push the leading summary line out
-    # of that window (BENCH_r10: parsed null from exactly this).
-    # Whether a captor keeps the head or the tail, one complete
-    # parseable summary line now survives. Additions only — the
-    # timing methodology and the first two lines are unchanged.
-    print(json.dumps(summary), flush=True)
-    spark.stop()
 
 
 def _pipeline_throughput(spark, n_rows: int = 200_000) -> float | None:

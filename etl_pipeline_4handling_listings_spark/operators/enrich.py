@@ -46,11 +46,13 @@ def batched_lookup(
 
     Partitioning mirrors the reference's quota logic (:504-520) —
     one transport call per ``batch_size`` keys — but the partition
-    count is capped at 4x cluster parallelism: batching happens by
+    count is capped at one task per core: batching happens by
     slicing the Arrow frame *inside* the task, so 10^9 distinct keys
-    cannot create millions of tiny shuffle partitions. The count
-    here is exact — cheap at this cardinality since only key columns
-    are scanned.
+    cannot create millions of tiny shuffle partitions, and transport
+    concurrency is bounded by cores either way — a task beyond that
+    only adds its Python-worker start-up cost. The count here is
+    exact — cheap at this cardinality since only key columns are
+    scanned.
     """
     # the sizing count recomputes the distinct when the caller later
     # acts on the returned plan — a bounded narrow shuffle over key
@@ -65,7 +67,7 @@ def batched_lookup(
         for field in result_schema.fields:
             empty = empty.withColumn(field.name, F.lit(None).cast(field.dataType))
         return empty.withColumn(ISSUE_COL, F.lit(None).cast("string"))
-    max_parts = max(1, df.sparkSession.sparkContext.defaultParallelism * 4)
+    max_parts = max(1, df.sparkSession.sparkContext.defaultParallelism)
     num_batches = min(max(1, math.ceil(n / batch_size)), max_parts)
     keys = keys.repartition(num_batches)
 

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline_4handling_listings_spark.arrowframe import arrow_frame
+
 
 @dataclass
 class Expectation:
@@ -91,7 +93,8 @@ def run_expectations(
     """All column expectations in ONE aggregate pass -> report frame."""
     spark = df.sparkSession
     if not expectations:
-        return spark.createDataFrame(
+        return arrow_frame(
+            spark,
             [],
             "constraint string, kind string, n_rows long,"
             " violations long, passed boolean",

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from etl_pipeline_4handling_listings_spark.arrowframe import arrow_frame
+
 
 def _degrees(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(node, deg) from an undirected edge list — one union + agg."""
@@ -318,7 +320,7 @@ def pagerank_converged(
     spark = edges.sparkSession
     if n == 0:
         return (
-            spark.createDataFrame([], "node bigint, pr bigint"),
+            arrow_frame(spark, [], "node bigint, pr bigint"),
             0,
             True,
         )

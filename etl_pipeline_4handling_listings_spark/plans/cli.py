@@ -129,18 +129,23 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             keys = KEYS if args.cmd == "curated" else KEYS + ["source_as_of_date"]
             pb = "_bucket" if (args.cmd == "curated" and args.partition_buckets) else None
             store = MergeStore(spark, args.store, keys=keys, partition_by=pb)
-            if args.cmd == "curated":
-                res = run_curated_load(raw, dims, store)
-                if args.rejects_dir:
-                    write_json_lines(res.rejected, f"{args.rejects_dir}/rejected")
-                    write_json_lines(
-                        res.outdated, f"{args.rejects_dir}/outdated", mode="append"
-                    )
-                table = res.curated
-            else:
-                table = run_history_load(raw, dims, store)
-            if args.output:
-                write_export(table, args.output, num_files=args.num_output_files)
+            res = None
+            try:
+                if args.cmd == "curated":
+                    res = run_curated_load(raw, dims, store)
+                    if args.rejects_dir:
+                        write_json_lines(res.rejected, f"{args.rejects_dir}/rejected")
+                        write_json_lines(
+                            res.outdated, f"{args.rejects_dir}/outdated", mode="append"
+                        )
+                    table = res.curated
+                else:
+                    table = run_history_load(raw, dims, store)
+                if args.output:
+                    write_export(table, args.output, num_files=args.num_output_files)
+            finally:
+                if res is not None:
+                    res.release()
             if args.vacuum_keep:
                 store.vacuum(keep=args.vacuum_keep)
         else:  # backfill

@@ -99,9 +99,14 @@ class ListingsDims(NamedTuple):
 
 
 def validate_listings(raw: DataFrame, dims: ListingsDims) -> ValidationSplit:
+    """Flag (:func:`flag_listings`), then split good/rejected over
+    the persisted flagged frame (ref transform.py:55-130)."""
+    return split_valid(flag_listings(raw, dims))
+
+
+def flag_listings(raw: DataFrame, dims: ListingsDims) -> DataFrame:
     """Broadcast-join dims, remap merged MLS boards, emit the ten
-    validation flags, split good/rejected (ref transform.py:55-130).
-    """
+    validation flags plus the reject sum/reasons columns."""
     boards = dims.boards.filter(F.col("mls").isNotNull()).select(
         F.col("mls").alias("_b_mls"), F.col("movedto").alias("_b_movedto")
     )
@@ -182,8 +187,7 @@ def validate_listings(raw: DataFrame, dims: ListingsDims) -> ValidationSplit:
     ]
     flagged = apply_rules(df, rules)
     helper_cols = [c for c in flagged.columns if c.startswith(("_b_", "_st_", "_z_", "_pst_"))]
-    flagged = flagged.drop(*helper_cols)
-    return split_valid(flagged)
+    return flagged.drop(*helper_cols)
 
 
 def transform_listings(df: DataFrame) -> DataFrame:
@@ -213,6 +217,13 @@ class CuratedResult(NamedTuple):
     curated: DataFrame
     rejected: DataFrame
     outdated: DataFrame
+    # frames the load persisted for the reject/outdated fan-out;
+    # ``release()`` them once those channels have been written
+    persisted: tuple[DataFrame, ...] = ()
+
+    def release(self) -> None:
+        for df in self.persisted:
+            df.unpersist()
 
 
 def run_curated_load(
@@ -222,13 +233,16 @@ def run_curated_load(
     with current store → W1 dedup + W2 carry-forward → M1 MERGE.
 
     Returns the post-merge table plus the reject/outdated side
-    channels (callers write them via sources.writers).
+    channels (callers write them via sources.writers, then call
+    ``release()`` on the result to drop the two cached frames the
+    channels read from).
 
     If ``store`` was constructed with ``partition_by``, the bucket
     column (``MergeStore.hash_bucket`` of the business key) is added
     automatically and merges prune untouched buckets.
     """
-    good, rejected = validate_listings(raw, dims)
+    flagged = flag_listings(raw, dims).persist()
+    good, rejected = split_valid(flagged, cache=False)
     # final-schema projection drops the validation bookkeeping (ref P5)
     good = good.drop(*[c for c in good.columns if c.startswith("_")])
     new = transform_listings(good).withColumn("_from", F.lit("new"))
@@ -259,7 +273,9 @@ def run_curated_load(
     ).drop("_rownum")
     final = latest.filter(F.col("_from") == "new").drop("_from")
     store.merge(final)
-    return CuratedResult(store.read(), rejected, outdated.drop("_from"))
+    return CuratedResult(
+        store.read(), rejected, outdated.drop("_from"), (flagged, ranked)
+    )
 
 
 def run_history_load(
@@ -268,40 +284,44 @@ def run_history_load(
     """History load (ref §3.2): per-(key, as_of) dedup (W4), lead
     previous values + changed flags (W6), three-clause MERGE (M2):
     changed → upsert; unchanged-but-present → DELETE."""
-    good, _ = validate_listings(raw, dims)
-    good = good.drop(*[c for c in good.columns if c.startswith("_")])
-    new = transform_listings(good).withColumn("_from", F.lit("new"))
-    hist_store.create_if_absent(new.drop("_from"))
-    current = hist_store.read().withColumn("_from", F.lit("curated"))
-    # pre-partition on the business key: HashPartitioning(mls, lid)
-    # satisfies the clustered distribution of BOTH windows below
-    # (W4 on (mls, lid, as_of) and W6 on (mls, lid)), so the whole
-    # dedup+lead stage runs on a single exchange
-    unioned = new.unionByName(current, allowMissingColumns=True).repartition(
-        *[F.col(k) for k in KEYS]
-    )
-    deduped = latest_record(
-        unioned,
-        HIST_KEYS,
-        [F.desc("listing_date"), F.asc("entry_date"), F.desc("load_date"), F.desc("_from")],
-    )
-    with_changes = changed_against_previous(
-        deduped,
-        KEYS,
-        ["source_as_of_date"],
-        DRIVING_COLS,
-    )
-    source = with_changes.drop(
-        *[c + "_old" for c in DRIVING_COLS],
-        *[c + "_changed_flag" for c in DRIVING_COLS],
-    ).withColumnRenamed(ANY_CHANGED_COL, "_insert_update_flag").drop("_from")
-    differs = unchanged_guard(DRIVING_COLS)
-    hist_store.merge(
-        source,
-        update_condition=lambda t, s: s["_insert_update_flag"] & differs(t, s),
-        delete_condition=lambda t, s: ~s["_insert_update_flag"],
-        insert_condition=lambda t, s: s["_insert_update_flag"],
-    )
+    flagged = flag_listings(raw, dims).persist()
+    try:
+        good, _ = split_valid(flagged, cache=False)
+        good = good.drop(*[c for c in good.columns if c.startswith("_")])
+        new = transform_listings(good).withColumn("_from", F.lit("new"))
+        hist_store.create_if_absent(new.drop("_from"))
+        current = hist_store.read().withColumn("_from", F.lit("curated"))
+        # pre-partition on the business key: HashPartitioning(mls, lid)
+        # satisfies the clustered distribution of BOTH windows below
+        # (W4 on (mls, lid, as_of) and W6 on (mls, lid)), so the whole
+        # dedup+lead stage runs on a single exchange
+        unioned = new.unionByName(current, allowMissingColumns=True).repartition(
+            *[F.col(k) for k in KEYS]
+        )
+        deduped = latest_record(
+            unioned,
+            HIST_KEYS,
+            [F.desc("listing_date"), F.asc("entry_date"), F.desc("load_date"), F.desc("_from")],
+        )
+        with_changes = changed_against_previous(
+            deduped,
+            KEYS,
+            ["source_as_of_date"],
+            DRIVING_COLS,
+        )
+        source = with_changes.drop(
+            *[c + "_old" for c in DRIVING_COLS],
+            *[c + "_changed_flag" for c in DRIVING_COLS],
+        ).withColumnRenamed(ANY_CHANGED_COL, "_insert_update_flag").drop("_from")
+        differs = unchanged_guard(DRIVING_COLS)
+        hist_store.merge(
+            source,
+            update_condition=lambda t, s: s["_insert_update_flag"] & differs(t, s),
+            delete_condition=lambda t, s: ~s["_insert_update_flag"],
+            insert_condition=lambda t, s: s["_insert_update_flag"],
+        )
+    finally:
+        flagged.unpersist()
     return hist_store.read()
 
 

@@ -59,6 +59,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # the generated-code cache is an LRU of compiled classes,
+        # default 100. Counted with CodegenMetrics' compilation
+        # histogram under an unbounded cache, one daily load (curated,
+        # history, backfill, Delta DML) generates 224 distinct classes
+        # and perfbench's registry mix 151: at 100 every steady-state
+        # pass recompiled ~190 / ~120 of them (Janino plus JIT work on
+        # the fresh bytecode). 512 holds both sets in one session.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

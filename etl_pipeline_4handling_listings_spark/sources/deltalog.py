@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..arrowframe import arrow_frame
 from .hivepath import DEFAULT_PARTITION, hive_part_str
 
 
@@ -1620,6 +1621,24 @@ def _norm_fp_col():
     return F.regexp_replace(F.col("_metadata.file_path"), _FP_NORM, "/")
 
 
+def _dv_decode_parts(
+    cardinalities: list, max_records: int, parallelism: int
+) -> int:
+    """Task count of the DV decode stage: enough tasks that each
+    emits about one Arrow batch (``max_records`` rows; <= 0 means
+    unbounded) of deleted-row positions, never more than one per
+    descriptor or per core — every task is a Python-worker start.
+    A descriptor without the (required) ``cardinality`` field gives
+    no estimate, so the stage takes the upper bound."""
+    cap = max(1, min(len(cardinalities), parallelism))
+    if any(c is None for c in cardinalities):
+        return cap
+    if max_records <= 0:
+        return 1
+    need = -(-sum(int(c) for c in cardinalities) // max_records)
+    return max(1, min(need, cap))
+
+
 def _apply_dvs(
     spark, table_path: str, df, dv_descs: list, keep_meta: bool = False
 ) -> "DataFrame":
@@ -1643,7 +1662,8 @@ def _apply_dvs(
         except (KeyError, ValueError, IndexError):
             return None
 
-    desc_df = spark.createDataFrame(
+    desc_df = arrow_frame(
+        spark,
         [
             (
                 os.path.abspath(f),
@@ -1677,9 +1697,14 @@ def _apply_dvs(
                     {"__fp": fp, "__ri": pd.Series(idxs, dtype="int64")}
                 )
 
-    doom = desc_df.repartition(
-        min(len(dv_descs), 64)
-    ).mapInPandas(decode, "__fp string, __ri long")
+    parts = _dv_decode_parts(
+        [_opt(d, "cardinality") for _, d in dv_descs],
+        int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+        spark.sparkContext.defaultParallelism,
+    )
+    doom = desc_df.repartition(parts).mapInPandas(
+        decode, "__fp string, __ri long"
+    )
     out = df.join(doom, ["__fp", "__ri"], "left_anti")
     if keep_meta:
         # delete/rewrite planning needs the (file, row_index) pair
@@ -1828,7 +1853,7 @@ def read_delta(
         F.col("add.deletionVector").alias("dv"),
     ).collect()
     if not rows:
-        return spark.createDataFrame([], logical)
+        return arrow_frame(spark, [], logical)
     files = [os.path.join(path, unquote(r["p"])) for r in rows]
     dv_descs = [
         (os.path.join(path, unquote(r["p"])), r["dv"])
@@ -2094,7 +2119,8 @@ def convert_from_delta(
             ptype = next(
                 f.dataType for f in schema.fields if f.name == pcol
             )
-            pv_df = spark.createDataFrame(
+            pv_df = arrow_frame(
+                spark,
                 [
                     (
                         os.path.abspath(
@@ -2408,7 +2434,7 @@ def read_delta_changes(
                 ),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return arrow_frame(spark, [], empty)
     out = frames[0]
     for df in frames[1:]:
         out = out.unionByName(df)
@@ -3429,7 +3455,7 @@ class _TableCtx:
             )
             sc = sc.join(
                 F.broadcast(
-                    self.spark.createDataFrame(pv_rows, pv_schema)
+                    arrow_frame(self.spark, pv_rows, pv_schema)
                 ),
                 "__fp",
             )
@@ -3757,9 +3783,7 @@ def _dml_from_delta(
         paths = [abs_of[r] for r in rels]
         if len(paths) <= 200:
             return frame.filter(F.col("__fp").isin(paths))
-        pdf = spark.createDataFrame(
-            [(x,) for x in paths], "__fp string"
-        )
+        pdf = arrow_frame(spark, [(x,) for x in paths], "__fp string")
         return frame.join(F.broadcast(pdf), "__fp", "left_semi")
 
     # change data feed: a DELETE commit on a CDF table must carry
@@ -5508,8 +5532,8 @@ def optimize_delta(
 
     src = ctx.scan(selected).join(
         F.broadcast(
-            spark.createDataFrame(
-                list(bin_of.items()), "__fp string, __bin int"
+            arrow_frame(
+                spark, list(bin_of.items()), "__fp string, __bin int"
             )
         ),
         "__fp",
@@ -5642,7 +5666,8 @@ def describe_delta_history(
                 ci.get("engineInfo"),
             )
         )
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         rows,
         "version long, timestamp long, operation string, "
         "operationParameters map<string,string>, engineInfo string",
@@ -5687,7 +5712,8 @@ def describe_delta_detail(spark: SparkSession, path: str) -> DataFrame:
         sorted(proto.get("readerFeatures") or []),
         sorted(proto.get("writerFeatures") or []),
     )
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         [row],
         "format string, id string, name string, "
         "description string, location string, createdAt long, "

@@ -92,6 +92,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from etl_pipeline_4handling_listings_spark.arrowframe import arrow_frame
 from etl_pipeline_4handling_listings_spark.operators.merge import Cond, merge_upsert
 from etl_pipeline_4handling_listings_spark.sources.hivepath import hive_part_str
 
@@ -2796,7 +2797,8 @@ class MergeStore:
             "writer_features": ",".join(proto["writer_features"]),
             "retained_versions": len(self.list_versions()),
         }
-        return self.spark.createDataFrame(
+        return arrow_frame(
+            self.spark,
             [row],
             "format string, location string, current_version string, "
             "num_files bigint, size_bytes bigint, partition_by string, "
@@ -2861,7 +2863,8 @@ class MergeStore:
                     size_bytes,
                 )
             )
-        return self.spark.createDataFrame(
+        return arrow_frame(
+            self.spark,
             rows,
             "version string, ts double, owner string,"
             " operation string, restore_of string,"

@@ -195,3 +195,36 @@ def test_read_json_lenient_splits_corrupt_rows(spark, tmp_path):
     bad_rows = [r["_corrupt_record"] for r in bad.collect()]
     assert len(bad_rows) == 2
     assert "this is not json" in bad_rows[0] or "this is not json" in bad_rows[1]
+
+
+def test_cli_curated_releases_its_cached_frames(spark, tmp_path):
+    """A curated run persists the flagged and ranked frames for the
+    reject/outdated fan-out and releases both once the channels and
+    the export are written; a history run releases its flagged frame
+    too, so repeated loads in one session hold no cache blocks."""
+    raw_dir = str(tmp_path / "raw")
+    dims_dir = str(tmp_path / "dims")
+    spark.createDataFrame(
+        [
+            _row(load_date="20240101"),
+            _row(load_date="20240101", status="Z"),  # reject
+        ],
+        RAW_SCHEMA,
+    ).write.parquet(raw_dir)
+    _write_dims(spark, dims_dir)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for cmd in ("curated", "history"):
+        argv = [
+            cmd,
+            "--raw-dirs", raw_dir,
+            "--dims-dir", dims_dir,
+            "--store", str(tmp_path / cmd),
+        ]  # fmt: skip
+        if cmd == "curated":
+            argv += [
+                "--output", str(tmp_path / "export"),
+                "--rejects-dir", str(tmp_path / "rejects"),
+            ]  # fmt: skip
+        assert main(argv, spark=spark) == 0
+        assert jsc.getPersistentRDDs().size() == before, cmd

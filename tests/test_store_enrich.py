@@ -67,8 +67,8 @@ def test_batched_lookup_success_and_degradation(spark):
 
 def test_batched_lookup_partition_cap(spark):
     # n >> batch_size * parallelism must NOT create one partition per
-    # batch (the 10^9-key cliff): partitions are capped at 4x
-    # parallelism and batching happens inside the task instead.
+    # batch (the 10^9-key cliff): partitions are capped at one per
+    # core and batching happens inside the task instead.
     n, batch_size = 2000, 3
     df = spark.createDataFrame([(i,) for i in range(n)], ["k"])
     schema = T.StructType([T.StructField("pid", T.LongType())])
@@ -78,7 +78,7 @@ def test_batched_lookup_partition_cap(spark):
         return [{"pid": len(rows)} for _ in rows]
 
     out = batched_lookup(df, ["k"], sized, schema, batch_size=batch_size)
-    cap = spark.sparkContext.defaultParallelism * 4
+    cap = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() <= cap
     rows = out.collect()
     assert len(rows) == n
