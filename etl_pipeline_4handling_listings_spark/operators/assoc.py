@@ -38,7 +38,6 @@ def association_rules(
     item_col: str,
     top_n: int = 20,
     max_basket: int = 1000,
-    freeze_invariants: bool = True,
 ) -> DataFrame:
     """Top-N item pairs by co-occurrence with support/confidence/lift.
 
@@ -48,16 +47,14 @@ def association_rules(
     of exact integers — deterministic; quantize at the call site if
     an oracle grid is needed).
 
-    ``freeze_invariants``: materialize the basket arrays and the
-    item-count frame with EAGER ``localCheckpoint``s (default True).
-    Their consumers alias-diverge, so the lazy plan re-scans and
-    re-aggregates the input up to four times; the freeze runs each
-    once. Trade-offs (same as
+    The basket arrays and the item-count frame are materialized with
+    EAGER ``localCheckpoint``s: their consumers alias-diverge, so the
+    lazy plan re-scans and re-aggregates the input up to four times;
+    the freeze runs each once. Trade-offs (same as
     ``setsim.prefix_filter_jaccard_pairs``): plan construction runs
     Spark jobs eagerly, lineage is truncated, and the checkpoint
     blocks are unreplicated executor-local storage released only on
-    driver-side GC — pass ``False`` on fault-critical cluster jobs
-    or plan-only callers; results are identical either way.
+    driver-side GC.
     """
     # ONE shuffle: collect_set dedups per basket with map-side
     # partials (no separate distinct pass). Pairs, item counts, and
@@ -65,16 +62,14 @@ def association_rules(
     # ReuseExchange does NOT unify its three consumers in practice
     # (alias divergence: the executed plan scanned + re-aggregated
     # the input FOUR times), so freeze the basket arrays once and
-    # let every consumer read the materialized rows (opt out via
-    # freeze_invariants).
+    # let every consumer read the materialized rows.
     grouped = (
         df.groupBy(basket_col)
         .agg(F.collect_set(F.col(item_col)).alias("_items"))
         .filter(F.size("_items") <= max_basket)
         .select(F.col("_items"))
+        .localCheckpoint(eager=True)
     )
-    if freeze_invariants:
-        grouped = grouped.localCheckpoint(eager=True)
     # pair fan-out via two Generate stages (explode x explode with a
     # value filter) — bounded by basket size squared, zero joins
     pairs = (
@@ -95,9 +90,8 @@ def association_rules(
         grouped.select(F.explode("_items").alias(item_col))
         .groupBy(item_col)
         .agg(F.count("*").cast("long").alias("item_count"))
+        .localCheckpoint(eager=True)
     )
-    if freeze_invariants:
-        item_counts = item_counts.localCheckpoint(eager=True)
     nb = grouped.agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
     ca = item_counts.select(
         F.col(item_col).alias("item_a"), F.col("item_count").alias("count_a")

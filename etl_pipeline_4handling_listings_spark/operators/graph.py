@@ -267,6 +267,72 @@ def member_pairs(
     )
 
 
+# -- PageRank on the 1e-12 integer grid: the kernel behind both the
+#    fixed-round registry query (queries.graph_pagerank) and the
+#    convergence probe below. Rank mass is a BIGINT; per-neighbor
+#    shares use integer division (pr div d) and damping is exactly
+#    17/20, so every engine computes the identical integer no matter
+#    the aggregation order.
+
+
+def _pagerank_setup(edges: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """``(deg(node, d), dirs_d(src, dst, d), n)`` for an undirected
+    ``(u, v)`` edge list.
+
+    The degree frame DOUBLES as the distinct-node set (the directed
+    frame is symmetric, so every node appears as a source): it is
+    frozen once and feeds the invariant build, the n count, the rank
+    init and any final join; unfrozen, the 2|E| aggregate executed
+    once per alias-divergent consumer and the rank init paid a
+    separate full distinct over the invariant. The source degree is
+    attached to the edge frame ONCE, so each power step is exactly
+    one join (edges x rank on src) + one partial agg on dst. The
+    invariant is hash-partitioned AND sorted on src before its
+    checkpoint (LogicalRDD preserves both), so every round's join
+    exchanges and sorts ONLY the rank side — without the pin each
+    round re-shuffled and re-sorted the 2|E| edge frame too."""
+    dirs = edges.select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
+    ).unionAll(
+        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+    deg = (
+        dirs.groupBy("src")
+        .agg(F.count("*").cast("long").alias("d"))
+        .withColumnRenamed("src", "node")
+        .localCheckpoint(eager=True)
+    )
+    dirs_d = (
+        dirs.join(deg.withColumnRenamed("node", "src"), "src")
+        .select("src", "dst", "d")
+        .repartition("src")
+        .sortWithinPartitions("src")
+        .localCheckpoint(eager=True)
+    )
+    return deg, dirs_d, deg.count()
+
+
+def _pagerank_init(deg: DataFrame, n: int) -> DataFrame:
+    """Uniform initial rank read off the frozen node set (no
+    distinct pass)."""
+    return deg.select("node", F.lit(10**12 // n).cast("long").alias("pr"))
+
+
+def _pagerank_step(dirs_d: DataFrame, pr: DataFrame, n: int) -> DataFrame:
+    """One power-iteration round: ``(1-d)/N + d * sum(pr div deg)``
+    with d = 17/20, all on the integer grid."""
+    base = (3 * 10**12) // (20 * n)  # (1-d)/N on the integer grid
+    return (
+        dirs_d.join(pr.withColumnRenamed("node", "src"), "src")
+        .groupBy("dst")
+        .agg(F.sum(F.expr("pr div d")).alias("s"))
+        .select(
+            F.col("dst").alias("node"),
+            (F.lit(base) + F.expr("(17 * s) div 20")).cast("long").alias("pr"),
+        )
+    )
+
+
 def pagerank_converged(
     edges: DataFrame,
     eps_e12: int = 10**6,
@@ -292,56 +358,18 @@ def pagerank_converged(
     round) as delta, so "converged" means the whole vector moved
     less than eps, not just the surviving keys.
     """
-    dirs = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    # degree frame doubles as the node set (dirs is symmetric) —
-    # freeze it once for the invariant build, n, and the rank init
-    # instead of re-running the 2|E| aggregate per consumer plus a
-    # separate distinct pass (see graph_pagerank)
-    deg = (
-        dirs.groupBy("src")
-        .agg(F.count("*").cast("long").alias("d"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
-    dirs_d = (
-        dirs.join(deg.withColumnRenamed("node", "src"), "src")
-        .select("src", "dst", "d")
-        # partition + sort on src before freezing: every round's join
-        # then exchanges/sorts only the rank side (see graph_pagerank)
-        .repartition("src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    n = deg.count()
-    spark = edges.sparkSession
+    deg, dirs_d, n = _pagerank_setup(edges)
     if n == 0:
         return (
-            arrow_frame(spark, [], "node bigint, pr bigint"),
+            arrow_frame(edges.sparkSession, [], "node bigint, pr bigint"),
             0,
             True,
         )
-    scale = 10**12
-    base = (3 * scale) // (20 * n)
-    pr = deg.select("node", F.lit(scale // n).cast("long").alias("pr"))
+    pr = _pagerank_init(deg, n)
     rounds = 0
     converged = False
     for _it in range(max_rounds):
-        nxt = (
-            dirs_d.join(pr.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("pr div d")).alias("s"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(base) + F.expr("(17 * s) div 20"))
-                .cast("long")
-                .alias("pr"),
-            )
-        )
-        nxt = nxt.localCheckpoint(eager=True)
+        nxt = _pagerank_step(dirs_d, pr, n).localCheckpoint(eager=True)
         rounds += 1
         delta = (
             nxt.withColumnRenamed("pr", "pr_new")

@@ -41,7 +41,6 @@ def prefix_filter_jaccard_pairs(
     id_col: str,
     tokens: Column,
     threshold: float,
-    freeze_invariants: bool = True,
 ) -> DataFrame:
     """All pairs with exact Jaccard(token sets) >= ``threshold``.
 
@@ -50,33 +49,31 @@ def prefix_filter_jaccard_pairs(
     id_a < id_b — identical contract (and identical output) to
     ``exact_jaccard_pairs``, reached through a prefix index.
 
-    ``freeze_invariants``: materialize the tokenized doc table with
-    an EAGER ``localCheckpoint`` (default True). The tokenize
-    subtree feeds four alias-divergent consumers that ReuseExchange
-    does not unify, so the lazy plan tokenizes the corpus up to six
-    times; the freeze runs it once. The trade-offs of the eager
-    checkpoint: building the DataFrame runs Spark jobs immediately,
-    lineage is truncated, and the blocks are UNREPLICATED
-    executor-local storage — on a cluster, losing an executor makes
-    downstream actions unrecoverable (must re-call the operator),
-    and the blocks are only released when the RDD is
-    garbage-collected driver-side. Pass ``False`` for long-lived
-    sessions, fault-critical cluster jobs, or plan-only callers;
-    the result is identical, Spark just re-executes the shared
-    subtree per consumer.
+    The tokenized doc table is materialized with an EAGER
+    ``localCheckpoint``: the tokenize subtree feeds four
+    alias-divergent consumers that ReuseExchange does not unify, so
+    the lazy plan tokenizes the corpus up to six times; the freeze
+    runs it once. The trade-offs of the eager checkpoint: building
+    the DataFrame runs Spark jobs immediately, lineage is truncated,
+    and the blocks are UNREPLICATED executor-local storage — on a
+    cluster, losing an executor makes downstream actions
+    unrecoverable (must re-call the operator), and the blocks are
+    only released when the RDD is garbage-collected driver-side.
     """
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # the tokenized doc table feeds the df-count pass, the rank pass,
     # and both verify sides — ReuseExchange does not unify them
     # (alias divergence; the executed plan tokenized the corpus SIX
-    # times), so freeze it once (opt out via freeze_invariants)
-    base = docs.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(F.array_distinct(tokens)).alias("_toks"),
-    ).withColumn("_sz", F.size("_toks"))
-    if freeze_invariants:
-        base = base.localCheckpoint(eager=True)
+    # times), so freeze it once
+    base = (
+        docs.select(
+            F.col(id_col).alias("_id"),
+            F.array_sort(F.array_distinct(tokens)).alias("_toks"),
+        )
+        .withColumn("_sz", F.size("_toks"))
+        .localCheckpoint(eager=True)
+    )
 
     ex = base.select("_id", "_sz", F.explode("_toks").alias("_tok"))
     # canonical global order: ascending document frequency, token as

@@ -26,6 +26,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_4handling_listings_spark.plans.listings import (
+    HIST_KEYS,
     KEYS,
     ListingsDims,
     backfill_property_ids,
@@ -51,13 +52,13 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--output", default=None, help="columnar export dir")
     p.add_argument("--num-output-files", type=int, default=None)
     p.add_argument("--vacuum-keep", type=int, default=None)
-    p.add_argument(
-        "--partition-buckets",
-        type=int,
-        default=None,
-        help="hash-bucket the store on the business key for "
-        "partition-pruned merges",
-    )
+
+
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -68,6 +69,14 @@ def build_parser() -> argparse.ArgumentParser:
         _add_common(p)
         if name == "curated":
             p.add_argument("--rejects-dir", default=None)
+            p.add_argument(
+                "--partition-buckets",
+                type=_positive_int,
+                default=None,
+                help="hash-bucket the store on the business key into N "
+                "buckets for partition-pruned merges; an existing store "
+                "keeps the count it was created with",
+            )
     b = sub.add_parser("backfill")
     b.add_argument("--store", required=True)
     b.add_argument("--limit", type=int, default=None)
@@ -126,9 +135,17 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         if args.cmd in ("curated", "history"):
             raw = _load_raw(spark, args)
             dims = _load_dims(spark, args.dims_dir)
-            keys = KEYS if args.cmd == "curated" else KEYS + ["source_as_of_date"]
-            pb = "_bucket" if (args.cmd == "curated" and args.partition_buckets) else None
-            store = MergeStore(spark, args.store, keys=keys, partition_by=pb)
+            if args.cmd == "curated":
+                pb = "_bucket" if args.partition_buckets else None
+                store = MergeStore(
+                    spark,
+                    args.store,
+                    keys=KEYS,
+                    partition_by=pb,
+                    n_buckets=args.partition_buckets,
+                )
+            else:
+                store = MergeStore(spark, args.store, keys=HIST_KEYS)
             res = None
             try:
                 if args.cmd == "curated":

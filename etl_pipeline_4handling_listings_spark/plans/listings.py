@@ -238,9 +238,13 @@ def run_curated_load(
     channels read from).
 
     If ``store`` was constructed with ``partition_by``, the bucket
-    column (``MergeStore.hash_bucket`` of the business key) is added
-    automatically and merges prune untouched buckets.
+    column (``MergeStore.hash_bucket`` of the business key into the
+    store's ``bucket_count()``) is added automatically and merges
+    prune untouched buckets.
     """
+    # refuses a count the existing store was not bucketed with,
+    # before anything is cached or written
+    n_buckets = store.bucket_count() if store.partition_by else None
     flagged = flag_listings(raw, dims).persist()
     good, rejected = split_valid(flagged, cache=False)
     # final-schema projection drops the validation bookkeeping (ref P5)
@@ -248,7 +252,7 @@ def run_curated_load(
     new = transform_listings(good).withColumn("_from", F.lit("new"))
     if store.partition_by and store.partition_by not in new.columns:
         new = new.withColumn(
-            store.partition_by, MergeStore.hash_bucket(KEYS, 64)
+            store.partition_by, MergeStore.hash_bucket(KEYS, n_buckets)
         )
     store.create_if_absent(new.drop("_from"))
     curated = store.read().withColumn("_from", F.lit("curated"))

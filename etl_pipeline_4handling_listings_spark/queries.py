@@ -8799,18 +8799,14 @@ def _duck_kcore_round(e_prev: str, e_next: str) -> str:
     "in clustering/textrank.",
 )
 def graph_kcore(spark, sf_dir):
+    from etl_pipeline_4handling_listings_spark.operators.graph import _degrees
+
     edges = _copresence_edges_cached(spark, sf_dir)
     ne = edges.count()
     # the unfiltered degree frame doubles as the distinct-node set:
     # materialize it once (|V|-bounded — tiny) and count THAT for nv
     # instead of paying a separate union+distinct pass over 2|E|
-    deg_all = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=True)
-    )
+    deg_all = _degrees(edges, "u", "v").localCheckpoint(eager=True)
     nv = deg_all.count()
     k = max(2, (2 * ne + 2 * nv - 1) // (2 * nv)) if nv else 2
     # peeling only removes edges, so a no-op round IS the fixpoint —
@@ -8827,14 +8823,8 @@ def graph_kcore(spark, sf_dir):
             # union+aggregate subtree TWICE per round (executed-plan
             # evidence: two independent BroadcastExchange->HashAggregate
             # chains per round at sf0.1)
-            deg_all = (
-                edges.select(F.col("u").alias("node"))
-                .unionAll(edges.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("d"))
-                .localCheckpoint(eager=True)
-            )
-        deg = deg_all.filter(F.col("d") >= k).select("node")
+            deg_all = _degrees(edges, "u", "v").localCheckpoint(eager=True)
+        deg = deg_all.filter(F.col("deg") >= k).select("node")
         edges = (
             edges.join(deg.withColumnRenamed("node", "u"), "u", "semi")
             .join(deg.withColumnRenamed("node", "v"), "v", "semi")
@@ -8943,62 +8933,24 @@ def _duck_pr_round(prev: str, nxt: str) -> str:
     "lineage is truncated mid-loop.",
 )
 def graph_pagerank(spark, sf_dir):
+    from etl_pipeline_4handling_listings_spark.operators.graph import (
+        _pagerank_init,
+        _pagerank_setup,
+        _pagerank_step,
+    )
+
     edges = _copresence_edges_cached(spark, sf_dir)
-    dirs = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    # the degree frame DOUBLES as the distinct-node set (dirs is
-    # symmetric, so every node appears as a source — the graph_kcore
-    # pattern): freeze the |V|-bounded frame once. It feeds the
-    # invariant build, the n count, the rank init, and the final
-    # top-20 join; unfrozen, the 2|E| aggregate executed twice and
-    # the rank init paid a separate full distinct over the invariant
-    # (a third 2|E|-scale exchange), all alias-divergent so
-    # ReuseExchange never fired.
-    deg = (
-        dirs.groupBy("src")
-        .agg(F.count("*").cast("long").alias("d"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
-    # attach the source degree to the edge frame ONCE, so each power
-    # step is exactly one join (edges x rank on src) + one partial
-    # agg on dst — the pr frame stays (node, pr) and never re-joins
-    # the degree table; the materialized frame is the loop invariant
-    # pin the loop invariant's layout: hash-partitioned AND sorted on
-    # src BEFORE the checkpoint (LogicalRDD preserves both), so each
-    # of the 6 power-step joins exchanges/sorts ONLY the rank side —
-    # without the pin every round re-shuffled and re-sorted the 2|E|
-    # edge frame too (the dominant shuffle at scale, 6x removed)
-    dirs_d = (
-        dirs.join(deg.withColumnRenamed("node", "src"), "src")
-        .select("src", "dst", "d")
-        .repartition("src")
-        .sortWithinPartitions("src")
-        .localCheckpoint(eager=True)
-    )
-    n = deg.count()
+    # deg doubles as the node set and feeds the final top-20 join;
+    # dirs_d is the src-partitioned loop invariant (operators/graph)
+    deg, dirs_d, n = _pagerank_setup(edges)
     if n == 0:
         return spark.createDataFrame(
             [],
             "user_id bigint, degree bigint, pr_e12 bigint, pagerank double",
         )
-    scale = 10**12
-    base = (3 * scale) // (20 * n)  # (1-d)/N on the integer grid
-    # rank init reads the frozen node set — no distinct pass
-    pr = deg.select("node", F.lit(scale // n).cast("long").alias("pr"))
+    pr = _pagerank_init(deg, n)
     for _it in range(6):
-        pr = (
-            dirs_d.join(pr.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("pr div d")).alias("s"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(base) + F.expr("(17 * s) div 20"))
-                .cast("long")
-                .alias("pr"),
-            )
-        )
+        pr = _pagerank_step(dirs_d, pr, n)
         if _it == 2:
             # truncate the nested join lineage halfway (planning
             # time grows superlinearly with depth; same trick as

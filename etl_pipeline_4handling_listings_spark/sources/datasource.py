@@ -17,9 +17,9 @@ first-class format any Spark job can consume —
 Design, scale-first:
 
 - **Batch**: one ``InputPartition`` per data file from the snapshot's
-  ``_FILES.json`` manifest (no directory LIST — the same O(1)
-  metadata read as ``MergeStore.read``), deletion vectors applied
-  per-file from the ``_dv/`` sidecar, rows returned as Arrow
+  file manifest (no directory LIST — the same O(1) metadata read as
+  ``MergeStore.read``), deletion vectors applied per-file from the
+  snapshot's sidecar, rows returned as Arrow
   RecordBatches (zero row-at-a-time Python in the data plane).
   Hive-style partition values are parsed from the file's directory
   name and injected as a constant column, exactly like Spark's own
@@ -43,7 +43,8 @@ Design, scale-first:
 Readers run without a SparkSession (driver planning + executor
 reads), so everything here is manifest/pyarrow-level Python — which
 is also what keeps it honest: the data plane is Arrow, the control
-plane is a handful of JSON reads.
+plane is a handful of JSON reads, all through the session-free
+layout readers of ``sources/store.py``.
 
 Reference semantics: Delta Lake's DataFrame/stream readers and
 Change Data Feed (public docs); reference pipeline
@@ -54,7 +55,6 @@ in for).
 from __future__ import annotations
 
 import itertools
-import json
 import os
 import time
 import uuid
@@ -75,39 +75,64 @@ from etl_pipeline_4handling_listings_spark.sources.hivepath import (
     DEFAULT_PARTITION,
     unescape_path_name,
 )
+from etl_pipeline_4handling_listings_spark.sources.store import (
+    MergeStore,
+    check_read_protocol,
+    check_write_protocol,
+    declared_write_rules,
+    read_commit_record,
+    read_dv_positions,
+    read_file_stats,
+    read_pointer,
+    read_schema,
+    read_table_meta,
+    snapshot_files,
+    staging_dir,
+    version_dir,
+)
 
-_POINTER = "_CURRENT"
-_SCHEMA = "_SCHEMA.json"
-_FILES = "_FILES.json"
-_DV = "_dv"
-_COMMITS = "_COMMITS"
+
+# -- the store's layout readers, raising where the engine returns None --
 
 
-# -- store-layout helpers (pure filesystem/JSON, session-free) ----------
-
-
-def _current_version(path: str) -> str:
-    try:
-        with open(os.path.join(path, _POINTER)) as f:
-            v = f.read().strip()
-    except FileNotFoundError:
-        raise FileNotFoundError(f"no MergeStore at {path}")
-    if not v:
+def _pointer(path: str) -> str:
+    v = read_pointer(path)
+    if v is None:
         raise FileNotFoundError(f"no MergeStore at {path}")
     return v
 
 
-def _check_parquet_format(path: str) -> None:
-    """The data source's Arrow data plane reads and writes PARQUET;
-    a store declared with another format (ORC is a supported engine
-    format) must be served through the engine API, not silently
-    misparsed file-by-file. Pre-metadata stores (no _TABLE.json)
-    are assumed parquet — the constructor default."""
-    try:
-        with open(os.path.join(path, "_TABLE.json")) as f:
-            fmt = json.load(f).get("format", "parquet")
-    except (OSError, ValueError):
-        return
+def _schema(path: str, version: str) -> StructType:
+    schema = read_schema(path, version)
+    if schema is None:
+        raise ValueError(
+            f"MergeStore at {path} has no persisted schema for {version}; "
+            "the data source requires a persisted schema (any snapshot "
+            "written by MergeStore carries one)"
+        )
+    return schema
+
+
+def _relpaths(path: str, version: str) -> list[str]:
+    files = snapshot_files(path, version)
+    if files is None:
+        raise RuntimeError(
+            f"snapshot {version} at {path} is no longer retained — "
+            "vacuum retention must exceed the stream's lag (keep more "
+            "versions or restart the stream from a retained offset)"
+        )
+    return sorted(files)
+
+
+def _check_servable(path: str) -> None:
+    """Refuse at planning what the Arrow data plane cannot serve: a
+    protocol feature this build lacks, or a store declared with a
+    format other than parquet (ORC is a supported engine format —
+    serve it through the engine API, never misparse it file by
+    file). Pre-metadata stores are parquet, the constructor
+    default."""
+    check_read_protocol(path)
+    fmt = read_table_meta(path).get("format", "parquet")
     if fmt != "parquet":
         raise ValueError(
             f"table at {path} is stored as {fmt!r}; the mergestore "
@@ -116,125 +141,9 @@ def _check_parquet_format(path: str) -> None:
         )
 
 
-def _check_reader_protocol(path: str) -> None:
-    """Refuse (driver-side, at planning) a table whose protocol lists
-    reader features this build does not implement — same contract as
-    ``MergeStore._check_read_protocol``, duplicated here because the
-    data source reads the layout directly, without a MergeStore."""
-    from etl_pipeline_4handling_listings_spark.sources.store import (
-        SUPPORTED_READER_FEATURES,
-        ProtocolUnsupportedError,
-    )
-
-    try:
-        listed = frozenset(
-            n
-            for n in os.listdir(os.path.join(path, "_PROTOCOL", "reader"))
-            if not n.startswith(".")
-        )
-    except FileNotFoundError:
-        return
-    unknown = listed - SUPPORTED_READER_FEATURES
-    if unknown:
-        raise ProtocolUnsupportedError(
-            f"table at {path} requires reader features {sorted(unknown)} "
-            "this build does not implement "
-            f"(supported: {sorted(SUPPORTED_READER_FEATURES)})"
-        )
-
-
 def _norm_version(v) -> str:
     s = str(v)
     return s if s.startswith("v") else f"v{int(s):05d}"
-
-
-def _version_dir(path: str, version: str) -> str:
-    return os.path.join(path, version)
-
-
-def _schema_of(path: str, version: str) -> StructType:
-    for p in (
-        os.path.join(_version_dir(path, version), _SCHEMA),
-        os.path.join(path, _SCHEMA),
-    ):
-        try:
-            with open(p) as f:
-                return StructType.fromJson(json.load(f))
-        except (FileNotFoundError, ValueError):
-            continue
-    raise ValueError(
-        f"MergeStore at {path} has no persisted schema for {version}; "
-        "the data source requires _SCHEMA.json (any snapshot written "
-        "by MergeStore carries one)"
-    )
-
-
-def _manifest_relpaths(path: str, version: str) -> list[str]:
-    vdir = _version_dir(path, version)
-    if not os.path.isdir(vdir):
-        raise RuntimeError(
-            f"snapshot {version} at {path} is no longer retained — "
-            "vacuum retention must exceed the stream's lag (keep more "
-            "versions or restart the stream from a retained offset)"
-        )
-    try:
-        with open(os.path.join(vdir, _FILES)) as f:
-            return sorted(json.load(f))
-    except (OSError, ValueError):
-        # pre-manifest snapshot: one directory walk, bookkeeping
-        # subtrees pruned
-        rels = []
-        for root, dirs, names in os.walk(vdir):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for n in names:
-                if not n.startswith(("_", ".")):
-                    rels.append(
-                        os.path.relpath(os.path.join(root, n), vdir)
-                    )
-        return sorted(rels)
-
-
-def _dv_map(path: str, version: str, prefix: str = "") -> dict[str, set]:
-    """file relpath -> set of soft-deleted row positions. ``prefix``
-    restricts the map to one partition directory so a
-    partition-scoped task never holds the whole table's DV state
-    (the unpartitioned case still loads it all — bounded by
-    not-yet-compacted deletes, which OPTIMIZE folds away)."""
-    import pyarrow.parquet as pq
-
-    dvdir = os.path.join(_version_dir(path, version), _DV)
-    try:
-        files = [
-            os.path.join(dvdir, n)
-            for n in os.listdir(dvdir)
-            if not n.startswith(("_", "."))
-        ]
-    except OSError:
-        return {}
-    out: dict[str, set] = {}
-    for f in files:
-        t = pq.read_table(f)
-        for rel, pos in zip(
-            t.column("_dv_file").to_pylist(),
-            t.column("_dv_pos").to_pylist(),
-        ):
-            if prefix and not rel.startswith(prefix):
-                continue
-            out.setdefault(rel, set()).add(pos)
-    return out
-
-
-def _commit_record(path: str, version: str) -> dict:
-    try:
-        with open(os.path.join(path, _COMMITS, f"{version}.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        pass
-    try:
-        with open(os.path.join(path, _COMMITS, "_compacted.json")) as f:
-            return json.load(f).get(version) or {}
-    except (OSError, ValueError):
-        return {}
 
 
 def _partition_value(field, raw: str):
@@ -389,17 +298,13 @@ class MergeStoreBatchReader(DataSourceReader):
         return True
 
     def partitions(self):
-        dv = _dv_map(self.path, self.version)
-        vdir = _version_dir(self.path, self.version)
+        # the unpartitioned case loads every DV — bounded by
+        # not-yet-compacted deletes, which OPTIMIZE folds away
+        dv = read_dv_positions(self.path, self.version)
+        vdir = version_dir(self.path, self.version)
         stats = None
         if self._pushed:
-            try:
-                with open(
-                    os.path.join(vdir, "_FILE_STATS.json")
-                ) as f:
-                    raw = json.load(f)
-            except (OSError, ValueError):
-                raw = None
+            raw = read_file_stats(self.path, self.version)
             if raw:
                 # re-key the index by manifest relpath ONCE: the
                 # index keys are input_file_name() URLs; matching
@@ -418,7 +323,7 @@ class MergeStoreBatchReader(DataSourceReader):
                     stats[rel] = colstats
         return [
             _FilePartition(vdir, rel, sorted(dv.get(rel, ())))
-            for rel in _manifest_relpaths(self.path, self.version)
+            for rel in _relpaths(self.path, self.version)
             if not self._pushed or self._keep_file(rel, stats)
         ]
 
@@ -469,7 +374,8 @@ class MergeStoreBatchReader(DataSourceReader):
 class MergeStorePushdownBatchReader(MergeStoreBatchReader):
     """File-level pruning (Spark 4.1 pushdown API): partition-dir
     elimination on hive-layout paths and min/max skipping from the
-    snapshot's ``_FILE_STATS.json`` index when one exists.
+    snapshot's file-stats index (``build_store_stats``) when one
+    exists.
 
     A SEPARATE class because merely DEFINING ``pushFilters`` makes
     Spark hard-fail when ``spark.sql.python.filterPushdown.enabled``
@@ -543,7 +449,7 @@ class MergeStoreDataSource(DataSource):
             self._pinned = (
                 _norm_version(v)
                 if v is not None
-                else _current_version(self.options["path"])
+                else _pointer(self.options["path"])
             )
         return self._pinned
 
@@ -557,25 +463,24 @@ class MergeStoreDataSource(DataSource):
             self._pinned_end = (
                 int(str(end).lstrip("v"))
                 if end is not None
-                else int(_current_version(self.options["path"])[1:])
+                else int(_pointer(self.options["path"])[1:])
             )
         return self._pinned_end
 
     def schema(self):
         path = self.options["path"]
-        _check_reader_protocol(path)
+        check_read_protocol(path)
         if self._cdc_mode():
             self._pin_cdc_end()
             return _cdc_schema(path)
-        return _schema_of(path, self._pin_version())
+        return _schema(path, self._pin_version())
 
     def reader(self, schema: StructType) -> DataSourceReader:
         # re-checked here, not only in schema(): a read with a USER-
         # SUPPLIED schema never calls schema(), and serving an
         # unsupported-protocol table under a user schema is exactly
         # the silent misread the protocol exists to prevent
-        _check_reader_protocol(self.options["path"])
-        _check_parquet_format(self.options["path"])
+        _check_servable(self.options["path"])
         if self._cdc_mode():
             return MergeStoreCDCBatchReader(
                 schema, self.options, self._pin_cdc_end()
@@ -647,59 +552,29 @@ class MergeStoreDataSource(DataSource):
                 "(mode('append')); overwriting a keyed store is a "
                 "merge/restore decision, not a file-level truncate"
             )
-        _check_reader_protocol(path)  # writers must satisfy both sides
-        _check_parquet_format(path)
-        from etl_pipeline_4handling_listings_spark.sources.store import (
-            SUPPORTED_WRITER_FEATURES,
-            ProtocolUnsupportedError,
-        )
-
-        try:
-            listed = frozenset(
-                n
-                for n in os.listdir(
-                    os.path.join(path, "_PROTOCOL", "writer")
-                )
-                if not n.startswith(".")  # same filter as the engine:
-                # a stray dotfile is not a feature requirement
+        _check_servable(path)
+        check_write_protocol(path)  # writers satisfy both sides
+        version = _pointer(path)
+        rules = declared_write_rules(path)
+        if rules:
+            raise ValueError(
+                f"table at {path} declares {rules[0]}, which are "
+                "enforced on the engine write path — use "
+                "MergeStore.append() instead of df.write"
             )
-        except FileNotFoundError:
-            listed = frozenset()
-        unknown = listed - SUPPORTED_WRITER_FEATURES
-        if unknown:
-            raise ProtocolUnsupportedError(
-                f"table at {path} requires writer features "
-                f"{sorted(unknown)} this build does not implement"
-            )
-        version = _current_version(path)
-        for meta, redirect in (
-            ("_CONSTRAINTS.json", "CHECK constraints"),
-            ("_GENERATED.json", "generated columns"),
-            ("_IDENTITY.json", "identity columns"),
-        ):
-            if os.path.exists(os.path.join(path, meta)):
-                raise ValueError(
-                    f"table at {path} declares {redirect}, which are "
-                    "enforced on the engine write path — use "
-                    "MergeStore.append() instead of df.write"
-                )
-        table_schema = _schema_of(path, version)
-        # partitioned tables: the declared shape from _TABLE.json
+        table_schema = _schema(path, version)
+        # partitioned tables: the declared shape in the table meta
         # wins (a FRESH partitioned table has no pcol=value dirs yet
         # — layout detection alone would mis-write root files into
         # it), then an explicit option, then hive-layout detection
         # for pre-metadata stores — the writer splits batches into
         # pcol=value dirs itself, matching what partitionBy writes
-        vdir = _version_dir(path, version)
+        vdir = version_dir(path, version)
         pcol = self.options.get(
             "partitionby", self.options.get("partitionBy")
         )
         if pcol is None:
-            try:
-                with open(os.path.join(path, "_TABLE.json")) as f:
-                    pcol = json.load(f).get("partition_by")
-            except (OSError, ValueError):
-                pcol = None
+            pcol = read_table_meta(path).get("partition_by")
         if pcol is None:
             for e in os.listdir(vdir):
                 if (
@@ -730,9 +605,7 @@ class MergeStoreDataSource(DataSource):
                 f"partition column {pcol!r} is not a table column "
                 f"(have {sorted(have)})"
             )
-        scratch = os.path.join(
-            path, "_STAGING", "dsw-" + uuid.uuid4().hex
-        )
+        scratch = os.path.join(staging_dir(path), "dsw-" + uuid.uuid4().hex)
         os.makedirs(scratch, exist_ok=True)
         return MergeStoreBatchWriter(schema, self.options, scratch, pcol)
 
@@ -787,7 +660,7 @@ class MergeStoreDataSource(DataSource):
         ident = str(ident)
         digest = hashlib.sha256(ident.encode()).hexdigest()[:16]
         scratch = os.path.join(
-            self.options["path"], "_STAGING", f"dsw-stream-{digest}"
+            staging_dir(self.options["path"]), f"dsw-stream-{digest}"
         )
         os.makedirs(scratch, exist_ok=True)
         return MergeStoreStreamWriter(
@@ -943,10 +816,6 @@ def _commit_scratch_files(
     if not files:
         return
     from pyspark.sql import SparkSession
-
-    from etl_pipeline_4handling_listings_spark.sources.store import (
-        MergeStore,
-    )
 
     keys = [
         k.strip()
@@ -1169,8 +1038,8 @@ def _prefix_bytes(path: str, versions, prefix: str) -> int:
     hardlinked files double-count, which only splits finer)."""
     total = 0
     for v in versions:
-        vdir = _version_dir(path, v)
-        for rel in _manifest_relpaths(path, v):
+        vdir = version_dir(path, v)
+        for rel in _relpaths(path, v):
             if prefix and not rel.startswith(prefix):
                 continue
             try:
@@ -1214,7 +1083,7 @@ def _plan_diff_partitions(
     parts = []
     for n in range(start_v, end_v):
         v_old, v_new = f"v{n:05d}", f"v{n + 1:05d}"
-        rec = _commit_record(path, v_new)
+        rec = read_commit_record(path, v_new)
         if rec.get("data_change") is False:
             # row-preserving rewrite (OPTIMIZE bin-packing): Delta
             # CDF's dataChange=false — no change rows by definition,
@@ -1224,7 +1093,7 @@ def _plan_diff_partitions(
             continue
         touched = rec.get("touched")
         if touched:
-            rels = _manifest_relpaths(path, v_new)
+            rels = _relpaths(path, v_new)
             pcol = next(
                 (
                     os.path.dirname(r).split("=", 1)[0]
@@ -1237,7 +1106,7 @@ def _plan_diff_partitions(
                 dirs = {r.split("/", 1)[0] for r in rels if "/" in r}
                 dirs |= {
                     r.split("/", 1)[0]
-                    for r in _manifest_relpaths(path, v_old)
+                    for r in _relpaths(path, v_old)
                     if "/" in r
                 }
                 if all(f"{pcol}={val}" in dirs for val in touched):
@@ -1266,8 +1135,8 @@ def _diff_side(partition: _DiffPartition, version: str, fields) -> dict:
     VECTORIZED per file through the same ``_bucket_ids`` the Arrow
     plane uses (key values re-typed to the schema's Arrow types so
     the hashes agree exactly)."""
-    dv = _dv_map(partition.path, version, partition.prefix)
-    vdir = _version_dir(partition.path, version)
+    dv = read_dv_positions(partition.path, version, partition.prefix)
+    vdir = version_dir(partition.path, version)
     nb = getattr(partition, "n_buckets", 1)
     key_types = None
     if nb > 1:
@@ -1279,7 +1148,7 @@ def _diff_side(partition: _DiffPartition, version: str, fields) -> dict:
             aschema.field(k).type for k in partition.keys
         ]
     rows: dict = {}
-    for rel in _manifest_relpaths(partition.path, version):
+    for rel in _relpaths(partition.path, version):
         if partition.prefix and not rel.startswith(partition.prefix):
             continue
         it = _read_file_dicts(vdir, rel, dv.get(rel, set()), fields)
@@ -1319,11 +1188,11 @@ def _read_side_table(partition: _DiffPartition, version: str, fields):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(fields)
-    dv = _dv_map(partition.path, version, partition.prefix)
-    vdir = _version_dir(partition.path, version)
+    dv = read_dv_positions(partition.path, version, partition.prefix)
+    vdir = version_dir(partition.path, version)
     nb = getattr(partition, "n_buckets", 1)
     chunks = []
-    for rel in _manifest_relpaths(partition.path, version):
+    for rel in _relpaths(partition.path, version):
         if partition.prefix and not rel.startswith(partition.prefix):
             continue
         table = pq.read_table(os.path.join(vdir, rel))
@@ -1537,7 +1406,7 @@ def _cdc_keys(options: dict) -> list:
 
 
 def _cdc_schema(path: str) -> StructType:
-    base = _schema_of(path, _current_version(path))
+    base = _schema(path, _pointer(path))
     return StructType(
         base.fields
         + [
@@ -1574,7 +1443,7 @@ class MergeStoreCDCStreamReader(DataSourceStreamReader):
         self._initial = (
             int(str(start).lstrip("v"))
             if start is not None
-            else int(_current_version(self.path)[1:])
+            else int(_pointer(self.path)[1:])
         )
         self._committed = self._initial
 
@@ -1582,7 +1451,7 @@ class MergeStoreCDCStreamReader(DataSourceStreamReader):
         return {"version": self._initial}
 
     def latestOffset(self) -> dict:
-        latest = int(_current_version(self.path)[1:])
+        latest = int(_pointer(self.path)[1:])
         if self.max_commits is not None:
             latest = min(
                 latest,
@@ -1658,12 +1527,12 @@ class MergeStoreCDCDataSource(DataSource):
         return "mergestore_cdc"
 
     def schema(self):
-        _check_reader_protocol(self.options["path"])
+        check_read_protocol(self.options["path"])
         return _cdc_schema(self.options["path"])
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         # user-supplied stream schemas bypass schema(): re-check
-        _check_reader_protocol(self.options["path"])
+        check_read_protocol(self.options["path"])
         return MergeStoreCDCStreamReader(schema, self.options)
 
 

@@ -38,8 +38,8 @@ Unsupported protocol features still fail by NAME
 (:class:`DeltaProtocolError`), never by silently misreading: reader
 features beyond the supported set.
 
-Scale notes: export walks only the per-snapshot ``_FILES.json``
-manifests (metadata-scale, no directory LIST) and writes the
+Scale notes: export walks only the per-snapshot file manifests
+(metadata-scale, no directory LIST) and writes the
 checkpoint via Arrow on the driver — one row per live file, the
 same driver-side cost Delta's own checkpointing pays; the
 PROTOCOL.md multi-part escape hatch is the 100 TB path and is
@@ -62,6 +62,7 @@ from pyspark.sql.window import Window
 
 from ..arrowframe import arrow_frame
 from .hivepath import DEFAULT_PARTITION, hive_part_str
+from .store import MergeStore, _vnum, read_commit_record, snapshot_files
 
 
 class DeltaProtocolError(RuntimeError):
@@ -438,22 +439,11 @@ def _version_adds(store, version: str) -> list[dict]:
     for small counts, ``_dv_export/`` files above the threshold) —
     their (file, row_index) model is exactly Delta's."""
     dv_map = _version_dv_map(store, version)
-    sizes = store._manifest_sizes(version)
-    if sizes is None:
-        # pre-manifest snapshot: walk once (export-time only)
-        vdir = store._version_dir(version)
-        sizes = {}
-        for root, dirs, names in os.walk(vdir):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for n in names:
-                if n.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, n)
-                sizes[p] = os.path.getsize(p)
+    sizes = snapshot_files(store.path, version) or {}
     adds = []
     vdir = store._version_dir(version)
-    for full in sorted(sizes):
-        rel_snap = os.path.relpath(full, vdir)
+    for rel_snap in sorted(sizes):
+        full = os.path.join(vdir, rel_snap)
         rel_root = f"{version}/{rel_snap}"
         add = {
             "path": _encode_path(rel_root),
@@ -463,7 +453,7 @@ def _version_adds(store, version: str) -> list[dict]:
                     rel_snap, store.partition_by
                 ).items()
             },
-            "size": int(sizes[full]),
+            "size": int(sizes[rel_snap]),
             "modificationTime": int(os.path.getmtime(full) * 1000),
             "dataChange": True,
             # private carry-detection keys (stripped before any add
@@ -601,21 +591,6 @@ def _write_change_data(store, prev: str, vname: str) -> list[dict]:
     return actions
 
 
-def _commit_record(store, version: str) -> dict:
-    manifest = os.path.join(store._commits_dir(), f"{version}.json")
-    try:
-        with open(manifest) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        try:
-            with open(
-                os.path.join(store._commits_dir(), "_compacted.json")
-            ) as f:
-                return json.load(f).get(version, {})
-        except (OSError, ValueError):
-            return {}
-
-
 def export_delta_log(
     store,
     max_checkpoint_part_rows: int | None = None,
@@ -695,7 +670,7 @@ def export_delta_log(
             max_checkpoint_part_rows,
             change_data=change_data,
         )
-        ck_ts = _commit_record(store, exportable[0]).get("ts")
+        ck_ts = read_commit_record(store.path, exportable[0]).get("ts")
         if ck_ts is not None:
             # timestamp time travel resolves by log-file mtime (both
             # this module's reader and stock delta-spark): stamp the
@@ -755,7 +730,7 @@ def export_delta_log(
     for prev, vname in zip(exportable, exportable[1:]):
         n = _vnum(vname)
         entry = os.path.join(log_dir, f"{n:020d}.json")
-        rec = _commit_record(store, vname)
+        rec = read_commit_record(store.path, vname)
         if os.path.exists(entry):
             # an occupied slot must BE a prior export (idempotent
             # re-export); a foreign commit there (append_to_delta /
@@ -925,10 +900,6 @@ def _assert_export_owned(entry: str, n: int) -> None:
             "route new rows through the store's merge instead of "
             "appending into its exported log"
         )
-
-
-def _vnum(version: str) -> int:
-    return int(version[1:])
 
 
 def _write_checkpoint(
@@ -1977,8 +1948,6 @@ def convert_from_delta(
     restarted stream writer owns its own checkpoint anyway.
     """
     import shutil
-
-    from .store import MergeStore
 
     log_dir = os.path.join(path, _LOG_DIR)
     if not os.path.isdir(log_dir):

@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_STATS = "_FILE_STATS.json"
+from etl_pipeline_4handling_listings_spark.sources.store import FILE_STATS
 
 
 def _as_datetime(v) -> _dt.datetime:
@@ -55,7 +55,8 @@ def _as_datetime(v) -> _dt.datetime:
 def build_file_stats(
     spark: SparkSession, path: str, cols: list[str]
 ) -> int:
-    """One distributed pass -> ``{path}/_FILE_STATS.json``.
+    """One distributed pass -> the stats index file under ``path``
+    (the name a store snapshot's ``read_file_stats`` reads).
 
     Returns the number of files indexed.
     """
@@ -76,10 +77,10 @@ def build_file_stats(
         }
         for r in rows
     }
-    tmp = os.path.join(path, _STATS + ".tmp")
+    tmp = os.path.join(path, FILE_STATS + ".tmp")
     with open(tmp, "w") as f:
         json.dump(stats, f, default=str)
-    os.replace(tmp, os.path.join(path, _STATS))
+    os.replace(tmp, os.path.join(path, FILE_STATS))
     return len(stats)
 
 
@@ -93,7 +94,7 @@ def read_with_skip(
     Falls back to the full directory when no index exists or the
     column is unindexed.
     """
-    stats_path = os.path.join(path, _STATS)
+    stats_path = os.path.join(path, FILE_STATS)
     try:
         with open(stats_path) as f:
             stats = json.load(f)

@@ -22,10 +22,8 @@ container, so a Delta branch would be untestable dead code): the
 public API maps 1:1 onto Delta — ``merge`` ≙ ``MERGE INTO`` with
 the same clause conditions (see ``operators/merge.py`` docstring),
 ``vacuum`` ≙ ``VACUUM``, ``read_version`` ≙ ``versionAsOf``,
-``read_changes`` ≙ change data feed. ``HAS_DELTA`` below reports
-whether delta-spark is importable so a deployment can choose the
-backend explicitly at store-construction time. Independent of that
-swap-in, ``sources/deltalog.export_delta_log`` mirrors a store's
+``read_changes`` ≙ change data feed. Independent of that swap-in,
+``sources/deltalog.export_delta_log`` mirrors a store's
 retained history into a spec-shaped ``_delta_log`` (JSON entries +
 parquet checkpoint per the public PROTOCOL.md) so STOCK Delta
 clients (delta-spark, delta-rs, Trino, DuckDB-delta) can read the
@@ -76,6 +74,34 @@ corruption modes (resurrecting DV-deleted rows, committing stale
 generated values). Markers are one file per feature, created
 O_EXCL and never removed, so protocol upgrades are monotone and
 race-free with no read-modify-write document.
+
+On-disk layout. This module is the only one that knows it: the data
+source (``sources/datasource.py``) and the Delta exporter
+(``sources/deltalog.py``) read a store through the session-free
+readers below (``read_pointer``, ``read_protocol`` and the
+``check_*_protocol`` refusals, ``read_table_meta``,
+``read_schema``, ``read_manifest`` / ``snapshot_files``,
+``dv_files`` / ``read_dv_positions``, ``read_file_stats``,
+``read_commit`` / ``read_commit_record``, ``staging_dir``), never
+by path::
+
+    <path>/_CURRENT                    pointer: name of the live version
+    <path>/_PROTOCOL/{reader,writer}/  one marker file per table feature
+    <path>/_TABLE.json                 declared keys, partition column and
+                                       bucket count, format
+    <path>/_SCHEMA.json                table-level schema (pre-evolution)
+    <path>/_CONSTRAINTS.json, _GENERATED.json, _IDENTITY.json
+                                       engine-enforced write rules
+    <path>/vNNNNN/                     one immutable snapshot
+        _SCHEMA.json                   the schema it was committed with
+        _FILES.json                    data-file relpath -> bytes
+        _OWNER                         the committing writer's claim id
+        _dv/                           deletion vectors (_dv_file, _dv_pos)
+        _FILE_STATS.json               per-file min/max index, when built
+                                       (``build_store_stats``)
+    <path>/_COMMITS/vNNNNN.json        commit record (claim + metadata)
+    <path>/_COMMITS/_compacted.json    records of vacuumed versions
+    <path>/_STAGING/                   writers' scratch, aged out by vacuum
 """
 
 from __future__ import annotations
@@ -96,14 +122,23 @@ from etl_pipeline_4handling_listings_spark.arrowframe import arrow_frame
 from etl_pipeline_4handling_listings_spark.operators.merge import Cond, merge_upsert
 from etl_pipeline_4handling_listings_spark.sources.hivepath import hive_part_str
 
-try:  # pragma: no cover - delta not shipped in this container
-    from delta.tables import DeltaTable  # noqa: F401
-
-    HAS_DELTA = True
-except Exception:  # ImportError or missing JVM jars
-    HAS_DELTA = False
-
 _POINTER = "_CURRENT"
+_PROTOCOL = "_PROTOCOL"
+_TABLE_META = "_TABLE.json"
+_SCHEMA = "_SCHEMA.json"
+_CONSTRAINTS = "_CONSTRAINTS.json"
+_GENERATED = "_GENERATED.json"
+_IDENTITY = "_IDENTITY.json"
+_FILES = "_FILES.json"
+_DV = "_dv"
+_COMMITS = "_COMMITS"
+_COMPACTED = "_compacted.json"
+_STAGING = "_STAGING"
+# also the name fileindex.build_file_stats writes under any directory
+FILE_STATS = "_FILE_STATS.json"
+# the bucket count of a partitioned store whose _TABLE.json predates
+# recording one: every such store was bucketed into 64
+_DEFAULT_BUCKETS = 64
 
 
 def _vnum(version: str) -> int:
@@ -169,6 +204,218 @@ _FEATURE_TOUCHES_READERS = {
 }
 
 
+# -- layout readers (pure filesystem/JSON, session-free) ---------------
+# Shared by MergeStore and by every module that reads a store without
+# one (the data source plans and reads in processes with no session).
+
+
+def _read_json(p: str, default=None):
+    try:
+        with open(p) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return default
+
+
+def version_dir(path: str, version: str) -> str:
+    return os.path.join(path, version)
+
+
+def staging_dir(path: str) -> str:
+    return os.path.join(path, _STAGING)
+
+
+def read_pointer(path: str) -> str | None:
+    """The live version named by ``_CURRENT``; ``None`` when the
+    store does not exist (or the pointer is empty)."""
+    try:
+        with open(os.path.join(path, _POINTER)) as f:
+            return f.read().strip() or None
+    except FileNotFoundError:
+        return None
+
+
+def read_protocol(path: str, side: str) -> frozenset:
+    """Feature names the table lists under ``_PROTOCOL/<side>``
+    (``reader`` or ``writer``); dotfiles are not requirements."""
+    try:
+        return frozenset(
+            name
+            for name in os.listdir(os.path.join(path, _PROTOCOL, side))
+            if not name.startswith(".")
+        )
+    except FileNotFoundError:
+        return frozenset()
+
+
+def check_read_protocol(path: str) -> None:
+    unknown = read_protocol(path, "reader") - SUPPORTED_READER_FEATURES
+    if unknown:
+        raise ProtocolUnsupportedError(
+            f"table at {path} requires reader features "
+            f"{sorted(unknown)} this build does not implement "
+            f"(supported: {sorted(SUPPORTED_READER_FEATURES)}); "
+            "refusing to read rather than silently misread"
+        )
+
+
+def check_write_protocol(path: str) -> None:
+    # a writer must satisfy BOTH sides (Delta's rule): every write
+    # re-materializes table state, so a writer blind to a reader
+    # feature would commit data that drops its effects
+    check_read_protocol(path)
+    unknown = read_protocol(path, "writer") - SUPPORTED_WRITER_FEATURES
+    if unknown:
+        raise ProtocolUnsupportedError(
+            f"table at {path} requires writer features "
+            f"{sorted(unknown)} this build does not implement "
+            f"(supported: {sorted(SUPPORTED_WRITER_FEATURES)}); "
+            "refusing to write rather than corrupt"
+        )
+
+
+def read_table_meta(path: str) -> dict:
+    """The declared shape from ``_TABLE.json`` (empty dict for
+    pre-metadata stores — consumers fall back to layout
+    detection)."""
+    return _read_json(os.path.join(path, _TABLE_META), {})
+
+
+def declared_write_rules(path: str) -> list[str]:
+    """The engine-enforced write rules the table has a declaration
+    file for (even an emptied one), as readable names: a writer
+    outside ``MergeStore`` cannot honor them and must refuse."""
+    return [
+        rule
+        for name, rule in (
+            (_CONSTRAINTS, "CHECK constraints"),
+            (_GENERATED, "generated columns"),
+            (_IDENTITY, "identity columns"),
+        )
+        if os.path.exists(os.path.join(path, name))
+    ]
+
+
+def read_schema(path: str, version: str) -> StructType | None:
+    """The schema ``version`` was COMMITTED with: the snapshot-local
+    ``_SCHEMA.json`` (written atomically with the commit — Delta's
+    per-log-entry schema), falling back to the table-level file for
+    pre-evolution snapshots, else ``None`` (inference). Per-version
+    schemas are what make ``schema_evolution`` time-travel-faithful:
+    reading v3 must not grow v7's columns."""
+    for p in (
+        os.path.join(version_dir(path, version), _SCHEMA),
+        os.path.join(path, _SCHEMA),
+    ):
+        try:
+            with open(p) as f:
+                return StructType.fromJson(json.load(f))
+        except (FileNotFoundError, ValueError):
+            continue
+    return None
+
+
+def _walk_data_files(snapshot_dir: str) -> dict[str, int]:
+    """Data-file relpath -> bytes by one directory walk. Bookkeeping
+    SUBTREES (``_dv``) are pruned: their files have plain
+    part-*.parquet names, so the basename check would register them
+    as data."""
+    files = {}
+    for root, dirs, names in os.walk(snapshot_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in names:
+            if name.startswith(("_", ".")):
+                continue  # _SUCCESS, .crc, _FILES.json itself
+            full = os.path.join(root, name)
+            files[os.path.relpath(full, snapshot_dir)] = os.path.getsize(full)
+    return files
+
+
+def read_manifest(path: str, version: str) -> dict[str, int] | None:
+    """Data-file relpath -> bytes from the snapshot's ``_FILES.json``
+    manifest, or ``None`` (pre-manifest snapshot)."""
+    return _read_json(os.path.join(version_dir(path, version), _FILES))
+
+
+def snapshot_files(path: str, version: str) -> dict[str, int] | None:
+    """Every data file of ``version`` (relpath -> bytes): the
+    manifest, or one directory walk for a pre-manifest snapshot.
+    ``None`` when the snapshot directory is gone (vacuumed)."""
+    vdir = version_dir(path, version)
+    if not os.path.isdir(vdir):
+        return None
+    files = read_manifest(path, version)
+    return _walk_data_files(vdir) if files is None else files
+
+
+def dv_files(path: str, version: str) -> list[str]:
+    """The snapshot's deletion-vector sidecar files (parquet rows of
+    ``_dv_file`` relpath, ``_dv_pos`` row index)."""
+    dvdir = os.path.join(version_dir(path, version), _DV)
+    try:
+        return [
+            os.path.join(dvdir, n)
+            for n in os.listdir(dvdir)
+            if not n.startswith(("_", "."))
+        ]
+    except OSError:
+        return []
+
+
+def read_dv_positions(
+    path: str, version: str, prefix: str = ""
+) -> dict[str, set]:
+    """Data-file relpath -> set of soft-deleted row positions, from
+    the snapshot's DV sidecars. ``prefix`` restricts the map to one
+    partition directory so a partition-scoped reader never holds the
+    whole table's DV state."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, set] = {}
+    for f in dv_files(path, version):
+        t = pq.read_table(f)
+        for rel, pos in zip(
+            t.column("_dv_file").to_pylist(),
+            t.column("_dv_pos").to_pylist(),
+        ):
+            if prefix and not rel.startswith(prefix):
+                continue
+            out.setdefault(rel, set()).add(pos)
+    return out
+
+
+def read_file_stats(path: str, version: str) -> dict | None:
+    """The snapshot's per-file min/max index (``input_file_name()``
+    URL -> column -> [min, max], as ``fileindex.build_file_stats``
+    wrote it), or ``None`` when none was built or it is unreadable."""
+    return _read_json(os.path.join(version_dir(path, version), FILE_STATS))
+
+
+def _commit_path(path: str, version: str) -> str:
+    return os.path.join(path, _COMMITS, f"{version}.json")
+
+
+def read_commit(path: str, version: str) -> dict | None:
+    """``version``'s LIVE commit record (``_COMMITS/vN.json``), or
+    ``None``. Conflict checks trust only this, never the compacted
+    copy."""
+    return _read_json(_commit_path(path, version))
+
+
+def read_compacted(path: str) -> dict:
+    """version -> record for the commits ``compact_log`` folded."""
+    return _read_json(os.path.join(path, _COMMITS, _COMPACTED), {})
+
+
+def read_commit_record(path: str, version: str) -> dict:
+    """``version``'s commit record, live or compacted (``{}`` when
+    neither has it)."""
+    rec = read_commit(path, version)
+    if rec is not None:
+        return rec
+    return read_compacted(path).get(version) or {}
+
+
 def _evolve_target(target: DataFrame, source: DataFrame) -> DataFrame:
     """Schema evolution (Delta ``withSchemaEvolution`` analogue):
     append the source's NEW columns to the target as typed NULLs, so
@@ -229,14 +476,20 @@ class MergeStore:
         fmt: str = "parquet",
         partition_by: str | None = None,
         log_store=None,
+        n_buckets: int | None = None,
     ) -> None:
         from .logstore import PosixLogStore
 
+        if n_buckets is not None and n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         self.spark = spark
         self.path = path
         self.keys = list(keys)
         self.fmt = fmt
         self.partition_by = partition_by
+        # hash-bucket count of a bucketed partition column, recorded
+        # in the table meta at creation (see bucket_count)
+        self.n_buckets = n_buckets
         # storage strategy for the four commit primitives (claim
         # create/break, publish, vacuum) — POSIX rename semantics by
         # default; object-store backends swap in a conditional-PUT
@@ -253,11 +506,7 @@ class MergeStore:
         return os.path.join(self.path, _POINTER)
 
     def current_version(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return read_pointer(self.path)
 
     def _set_current(self, version: str) -> None:
         """Advance-only pointer flip: ``_CURRENT`` never moves
@@ -287,23 +536,14 @@ class MergeStore:
         )
 
     def _version_dir(self, version: str) -> str:
-        return os.path.join(self.path, version)
+        return version_dir(self.path, version)
 
     # -- protocol versioning (Delta reader/writer table features) -------
-    _PROTOCOL = "_PROTOCOL"
-
     def _protocol_dir(self, side: str) -> str:
-        return os.path.join(self.path, self._PROTOCOL, side)
+        return os.path.join(self.path, _PROTOCOL, side)
 
     def _protocol_side(self, side: str) -> frozenset:
-        try:
-            return frozenset(
-                name
-                for name in os.listdir(self._protocol_dir(side))
-                if not name.startswith(".")
-            )
-        except FileNotFoundError:
-            return frozenset()
+        return read_protocol(self.path, side)
 
     def protocol(self) -> dict:
         """The table's protocol: which features readers and writers
@@ -340,32 +580,14 @@ class MergeStore:
                 pass
 
     def _check_read_protocol(self) -> None:
-        unknown = self._protocol_side("reader") - SUPPORTED_READER_FEATURES
-        if unknown:
-            raise ProtocolUnsupportedError(
-                f"table at {self.path} requires reader features "
-                f"{sorted(unknown)} this build does not implement "
-                f"(supported: {sorted(SUPPORTED_READER_FEATURES)}); "
-                "refusing to read rather than silently misread"
-            )
+        check_read_protocol(self.path)
 
     def _check_write_protocol(self) -> None:
-        # a writer must satisfy BOTH sides (Delta's rule): every
-        # write re-materializes table state, so a writer blind to a
-        # reader feature would commit data that drops its effects
-        self._check_read_protocol()
-        unknown = self._protocol_side("writer") - SUPPORTED_WRITER_FEATURES
-        if unknown:
-            raise ProtocolUnsupportedError(
-                f"table at {self.path} requires writer features "
-                f"{sorted(unknown)} this build does not implement "
-                f"(supported: {sorted(SUPPORTED_WRITER_FEATURES)}); "
-                "refusing to write rather than corrupt"
-            )
+        check_write_protocol(self.path)
 
     # -- commit protocol (optimistic concurrency) -----------------------
     def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_COMMITS")
+        return os.path.join(self.path, _COMMITS)
 
     def _commit_ts(self, version: str) -> float:
         """In-commit timestamp (Delta ``inCommitTimestamps``
@@ -390,7 +612,7 @@ class MergeStore:
         return now
 
     def _staging_dir(self) -> str:
-        return os.path.join(self.path, "_STAGING")
+        return staging_dir(self.path)
 
     def _claim_version(
         self,
@@ -415,7 +637,7 @@ class MergeStore:
         fast-forward past this commit without re-running its merge.
         """
         os.makedirs(self._commits_dir(), exist_ok=True)
-        manifest = os.path.join(self._commits_dir(), f"{version}.json")
+        manifest = _commit_path(self.path, version)
         record = {
             "version": version,
             "owner": uuid.uuid4().hex,
@@ -486,13 +708,8 @@ class MergeStore:
         owner = getattr(self, "_claim_owner", None)
         if not owner:
             return
-        manifest = os.path.join(self._commits_dir(), f"{version}.json")
-        try:
-            with open(manifest) as f:
-                if json.load(f).get("owner") == owner:
-                    return
-        except (OSError, ValueError):
-            pass
+        if (read_commit(self.path, version) or {}).get("owner") == owner:
+            return
         record = {
             "version": version,
             "owner": owner,
@@ -502,7 +719,9 @@ class MergeStore:
             record["touched"] = sorted(touched)
         if extra:
             record.update(extra)
-        self.log_store.replace_file(manifest, json.dumps(record))
+        self.log_store.replace_file(
+            _commit_path(self.path, version), json.dumps(record)
+        )
 
     def _finalize_commit(
         self,
@@ -538,11 +757,8 @@ class MergeStore:
         actually rewrote. Mismatch (or a pending re-assert) degrades
         to the conservative full re-merge. Snapshots without a stamp
         (pre-stamp commits) keep the old trust-the-manifest behavior."""
-        manifest = os.path.join(self._commits_dir(), f"{version}.json")
-        try:
-            with open(manifest) as f:
-                record = json.load(f)
-        except (OSError, ValueError):
+        record = read_commit(self.path, version)
+        if record is None:
             return None
         t = record.get("touched")
         if not isinstance(t, list):
@@ -633,7 +849,7 @@ class MergeStore:
             return 0
         live = self.list_versions()
         oldest_live = live[0] if live else None
-        compacted_path = os.path.join(commits, "_compacted.json")
+        compacted_path = os.path.join(commits, _COMPACTED)
         try:
             with open(compacted_path) as f:
                 compacted = json.load(f)
@@ -641,7 +857,7 @@ class MergeStore:
             compacted = {}
         folded = 0
         for entry in sorted(os.listdir(commits)):
-            if not entry.endswith(".json") or entry == "_compacted.json":
+            if not entry.endswith(".json") or entry == _COMPACTED:
                 continue
             version = entry[:-5]
             if oldest_live is None or _vnum(version) >= _vnum(oldest_live):
@@ -677,43 +893,23 @@ class MergeStore:
         return self.current_version() is not None
 
     def _schema_path(self) -> str:
-        return os.path.join(self.path, "_SCHEMA.json")
-
-    _SCHEMA = "_SCHEMA.json"
+        return os.path.join(self.path, _SCHEMA)
 
     def _version_schema(self, version: str) -> StructType | None:
-        """The schema a snapshot was COMMITTED with: the snapshot-
-        local ``_SCHEMA.json`` (written atomically with the commit —
-        Delta's per-log-entry schema), falling back to the table-
-        level file for pre-evolution snapshots, else ``None``
-        (inference). Per-version schemas are what make
-        ``schema_evolution`` time-travel-faithful: reading v3 must
-        not grow v7's columns."""
-        for p in (
-            os.path.join(self._version_dir(version), self._SCHEMA),
-            self._schema_path(),
-        ):
-            try:
-                with open(p) as f:
-                    return StructType.fromJson(json.load(f))
-            except (FileNotFoundError, ValueError):
-                continue
-        return None
+        return read_schema(self.path, version)
 
-    @classmethod
-    def _write_snapshot_schema(
-        cls, snapshot_dir: str, schema: StructType
-    ) -> None:
+    @staticmethod
+    def _write_snapshot_schema(snapshot_dir: str, schema: StructType) -> None:
         """Persist the snapshot's schema INSIDE the (pre-rename)
         snapshot dir, so schema travels atomically with the commit."""
-        tmp = os.path.join(snapshot_dir, cls._SCHEMA + ".tmp")
+        tmp = os.path.join(snapshot_dir, _SCHEMA + ".tmp")
         with open(tmp, "w") as f:
             json.dump(schema.jsonValue(), f)
-        os.replace(tmp, os.path.join(snapshot_dir, cls._SCHEMA))
+        os.replace(tmp, os.path.join(snapshot_dir, _SCHEMA))
 
     # -- generated columns (Delta GENERATED ALWAYS AS analogue) ---------
     def _generated_path(self) -> str:
-        return os.path.join(self.path, "_GENERATED.json")
+        return os.path.join(self.path, _GENERATED)
 
     def generated_columns(self) -> dict[str, str]:
         """Active generated columns: ``{name: sql_expr}``."""
@@ -856,7 +1052,7 @@ class MergeStore:
 
     # -- identity columns (GENERATED ALWAYS AS IDENTITY) ----------------
     def _identity_path(self) -> str:
-        return os.path.join(self.path, "_IDENTITY.json")
+        return os.path.join(self.path, _IDENTITY)
 
     def identity_columns(self) -> dict[str, dict]:
         """Declared identity columns: ``{name: {"start": s, "step": k}}``."""
@@ -910,12 +1106,7 @@ class MergeStore:
         verification must not see its OWN claim's mark."""
         best = None
         commits = self._commits_dir()
-        records: list[dict] = []
-        try:
-            with open(os.path.join(commits, "_compacted.json")) as f:
-                records.extend(json.load(f).values())
-        except (OSError, ValueError):
-            pass
+        records = list(read_compacted(self.path).values())
         try:
             entries = os.listdir(commits)
         except FileNotFoundError:
@@ -986,7 +1177,7 @@ class MergeStore:
 
     # -- CHECK constraints (Delta invariant analogue) -------------------
     def _constraints_path(self) -> str:
-        return os.path.join(self.path, "_CONSTRAINTS.json")
+        return os.path.join(self.path, _CONSTRAINTS)
 
     def constraints(self) -> dict[str, str]:
         """Active CHECK constraints: ``{name: sql_boolean_expr}``."""
@@ -1100,8 +1291,6 @@ class MergeStore:
         self._write_table_meta()
         self._write_snapshot(template.limit(0), "v00000")
 
-    _TABLE_META = "_TABLE.json"
-
     def _write_table_meta(self) -> None:
         """Persist the table's DECLARED shape (merge keys, partition
         column) so layout-independent consumers can discover it —
@@ -1113,22 +1302,38 @@ class MergeStore:
             "partition_by": self.partition_by,
             "format": self.fmt,
         }
+        if self.n_buckets is not None:
+            meta["n_buckets"] = self.n_buckets
         tmp = os.path.join(
-            self.path, self._TABLE_META + "." + uuid.uuid4().hex
+            self.path, _TABLE_META + "." + uuid.uuid4().hex
         )
         with open(tmp, "w") as f:
             json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, self._TABLE_META))
+        os.replace(tmp, os.path.join(self.path, _TABLE_META))
 
     def table_meta(self) -> dict:
-        """The declared shape from ``_TABLE.json`` (empty dict for
-        pre-metadata stores — consumers fall back to layout
-        detection)."""
-        try:
-            with open(os.path.join(self.path, self._TABLE_META)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
+        return read_table_meta(self.path)
+
+    def bucket_count(self) -> int:
+        """The bucket count for :meth:`hash_bucket` on this store: the
+        one recorded at creation (64 for a store created before counts
+        were recorded), or the constructor's ``n_buckets`` (default
+        64) while the store does not exist yet. A pruned merge reads
+        only the source rows' buckets, so a row bucketed under another
+        count would never be matched and its key would duplicate:
+        a constructor count that disagrees with the recorded one is
+        refused."""
+        if not self.exists():
+            return self.n_buckets or _DEFAULT_BUCKETS
+        recorded = self.table_meta().get("n_buckets", _DEFAULT_BUCKETS)
+        if self.n_buckets is not None and self.n_buckets != recorded:
+            raise ValueError(
+                f"store at {self.path} is bucketed into {recorded} "
+                f"buckets; n_buckets={self.n_buckets} would bucket new "
+                "rows differently and duplicate updated keys — pass "
+                f"{recorded} or rebuild the store"
+            )
+        return recorded
 
     def read(self) -> DataFrame:
         version = self.current_version()
@@ -1137,10 +1342,8 @@ class MergeStore:
         return self.read_version(version)
 
     # -- file manifests (Delta log-replay analogue) ---------------------
-    _FILES = "_FILES.json"
-
-    @classmethod
-    def _write_file_manifest(cls, snapshot_dir: str) -> int:
+    @staticmethod
+    def _write_file_manifest(snapshot_dir: str) -> int:
         """Record the snapshot's data files (relpath + size) inside
         the snapshot itself, BEFORE the commit rename makes it live —
         the manifest is therefore exactly as atomic as the commit.
@@ -1150,23 +1353,11 @@ class MergeStore:
         O(1) metadata ops per read instead of O(files) LIST calls,
         the difference that matters on object stores where LIST is
         the slowest, rate-limited primitive. Returns the file count."""
-        files = {}
-        for root, dirs, names in os.walk(snapshot_dir):
-            # prune bookkeeping SUBTREES (_dv deletion vectors): their
-            # files have plain part-*.parquet names, so the basename
-            # check below would register them as data
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for name in names:
-                if name.startswith(("_", ".")):
-                    continue  # _SUCCESS, .crc, _FILES.json itself
-                full = os.path.join(root, name)
-                files[os.path.relpath(full, snapshot_dir)] = os.path.getsize(
-                    full
-                )
-        tmp = os.path.join(snapshot_dir, cls._FILES + ".tmp")
+        files = _walk_data_files(snapshot_dir)
+        tmp = os.path.join(snapshot_dir, _FILES + ".tmp")
         with open(tmp, "w") as f:
             json.dump(files, f)
-        os.replace(tmp, os.path.join(snapshot_dir, cls._FILES))
+        os.replace(tmp, os.path.join(snapshot_dir, _FILES))
         return len(files)
 
     def _manifest_sizes(self, version: str) -> dict[str, int] | None:
@@ -1176,12 +1367,10 @@ class MergeStore:
         (optimize's bin-packing) never re-stat O(files) paths — the
         exact per-file metadata traffic the manifest exists to
         eliminate on object stores."""
-        vdir = self._version_dir(version)
-        try:
-            with open(os.path.join(vdir, self._FILES)) as f:
-                files = json.load(f)
-        except (OSError, ValueError):
+        files = read_manifest(self.path, version)
+        if files is None:
             return None
+        vdir = self._version_dir(version)
         return {
             os.path.join(vdir, rel): int(size)
             for rel, size in files.items()
@@ -1221,7 +1410,6 @@ class MergeStore:
         update_condition: Cond = None,
         delete_condition: Cond = None,
         insert_condition: Cond = None,
-        broadcast_source: bool = False,
         max_retries: int = 5,
         claim_expiry_s: float = 300.0,
         schema_evolution: bool = False,
@@ -1243,9 +1431,6 @@ class MergeStore:
         staging write (no extra scan); a violation aborts before the
         commit claim and raises :class:`ConstraintViolationError`
         with the store unchanged.
-
-        ``broadcast_source=True`` hints the merge join when the
-        source batch is small relative to the table.
 
         With ``partition_by`` declared, the merge is PRUNED: only
         partitions containing source rows are joined and rewritten;
@@ -1293,7 +1478,6 @@ class MergeStore:
             self._require_feature("snapshot-schema")
             self._refuse_tombstoned(source)
         source = self._apply_generated(source)
-        src = F.broadcast(source) if broadcast_source else source
         self.merge_recomputes = 0
         self.merge_fast_forwards = 0
         # surviving merged output across lost-but-disjoint races:
@@ -1349,10 +1533,10 @@ class MergeStore:
                             F.col(pcol).isin(touched)
                         )
                         if schema_evolution:
-                            tgt = _evolve_target(tgt, src)
+                            tgt = _evolve_target(tgt, source)
                         merged = merge_upsert(
                             tgt,
-                            src,
+                            source,
                             self.keys,
                             update_condition=update_condition,
                             delete_condition=delete_condition,
@@ -1441,10 +1625,10 @@ class MergeStore:
                 else:
                     tgt = self.read_version(base)
                     if schema_evolution:
-                        tgt = _evolve_target(tgt, src)
+                        tgt = _evolve_target(tgt, source)
                     merged = merge_upsert(
                         tgt,
-                        src,
+                        source,
                         self.keys,
                         update_condition=update_condition,
                         delete_condition=delete_condition,
@@ -1549,12 +1733,7 @@ class MergeStore:
         batch as duplicates. Masking rules documented on
         :meth:`last_txn_version`."""
         commits = self._commits_dir()
-        records: list[dict] = []
-        try:
-            with open(os.path.join(commits, "_compacted.json")) as f:
-                records.extend(json.load(f).values())
-        except (OSError, ValueError):
-            pass
+        records = list(read_compacted(self.path).values())
         try:
             entries = os.listdir(commits)
         except FileNotFoundError:
@@ -1864,7 +2043,7 @@ class MergeStore:
                         # _SCHEMA/_FILES/_OWNER are re-derived by
                         # the caller (never linked: writing through
                         # a shared inode would rewrite the base's)
-                        if entry == self._DV:
+                        if entry == _DV:
                             _link_tree(
                                 src, os.path.join(staging, entry)
                             )
@@ -1966,7 +2145,7 @@ class MergeStore:
         """Release a claim THIS writer holds and has not renamed
         into: safe exactly because no snapshot dir exists yet, so
         nothing references the manifest."""
-        manifest = os.path.join(self._commits_dir(), f"{version}.json")
+        manifest = _commit_path(self.path, version)
         try:
             with open(manifest) as f:
                 if json.load(f).get("owner") != getattr(
@@ -1988,7 +2167,7 @@ class MergeStore:
         owner = getattr(self, "_claim_owner", None)
         if not owner:
             return
-        manifest = os.path.join(self._commits_dir(), f"{version}.json")
+        manifest = _commit_path(self.path, version)
         record = {
             "version": version,
             "owner": owner,
@@ -2087,12 +2266,9 @@ class MergeStore:
         return self.read_version(self.version_as_of(ts))
 
     def _manifest_ts(self, version: str) -> float | None:
-        manifest = os.path.join(self._commits_dir(), f"{version}.json")
         try:
-            with open(manifest) as f:
-                rec = json.load(f)
-            return float(rec["ts"])
-        except (OSError, ValueError, KeyError, TypeError):
+            return float(read_commit(self.path, version)["ts"])
+        except (ValueError, KeyError, TypeError):
             return None
 
     @classmethod
@@ -2218,6 +2394,7 @@ class MergeStore:
             self.keys,
             fmt=self.fmt,
             partition_by=self.partition_by,
+            n_buckets=self.table_meta().get("n_buckets"),
         )
         if target.exists():
             raise FileExistsError(f"store already exists at {new_path}")
@@ -2281,11 +2458,11 @@ class MergeStore:
         # the clone's v00000 carries the source's feature-bearing
         # state (DV sidecars, evolved schemas), so its protocol
         # travels with it — cloning must never downgrade
-        src_proto = os.path.join(self.path, self._PROTOCOL)
+        src_proto = os.path.join(self.path, _PROTOCOL)
         if os.path.isdir(src_proto):
             shutil.copytree(
                 src_proto,
-                os.path.join(new_path, self._PROTOCOL),
+                os.path.join(new_path, _PROTOCOL),
                 dirs_exist_ok=True,
             )
         target._set_current("v00000")
@@ -2818,15 +2995,10 @@ class MergeStore:
         scale: rows = commits, built driver-side from the commit dir
         (no data files are read)."""
         commits = self._commits_dir()
-        records: dict[str, dict] = {}
-        try:
-            with open(os.path.join(commits, "_compacted.json")) as f:
-                records.update(json.load(f))
-        except (OSError, ValueError):
-            pass
+        records: dict[str, dict] = dict(read_compacted(self.path))
         if os.path.isdir(commits):
             for entry in os.listdir(commits):
-                if not entry.endswith(".json") or entry == "_compacted.json":
+                if not entry.endswith(".json") or entry == _COMPACTED:
                     continue
                 try:
                     with open(os.path.join(commits, entry)) as f:
@@ -2839,15 +3011,10 @@ class MergeStore:
         for version in sorted(records, key=_vnum):
             rec = records[version] or {}
             n_files = size_bytes = None
-            if version in live:
-                vdir = self._version_dir(version)
-                try:
-                    with open(os.path.join(vdir, self._FILES)) as f:
-                        manifest = json.load(f)
-                    n_files = len(manifest)
-                    size_bytes = sum(manifest.values())
-                except (OSError, ValueError):
-                    pass
+            manifest = read_manifest(self.path, version) if version in live else None
+            if manifest is not None:
+                n_files = len(manifest)
+                size_bytes = sum(manifest.values())
             touched = rec.get("touched")
             rows.append(
                 (
@@ -2948,20 +3115,8 @@ class MergeStore:
     # semantics: Delta Lake deletion vectors / REORG APPLY (PURGE)
     # (public docs), re-expressed over plain parquet + _metadata.
 
-    _DV = "_dv"
-
-    def _dv_dir(self, version: str) -> str:
-        return os.path.join(self._version_dir(version), self._DV)
-
     def _dv_files(self, version: str) -> list[str]:
-        try:
-            return [
-                os.path.join(self._dv_dir(version), n)
-                for n in os.listdir(self._dv_dir(version))
-                if not n.startswith(("_", "."))
-            ]
-        except OSError:
-            return []
+        return dv_files(self.path, version)
 
     def _dv_frame(self, version: str) -> DataFrame | None:
         """The snapshot's deletion vectors as (_dv_file, _dv_pos), or
@@ -3023,7 +3178,7 @@ class MergeStore:
         if keep.limit(1).count() == 0:
             return
         keep.write.mode("overwrite").parquet(
-            os.path.join(staging, self._DV)
+            os.path.join(staging, _DV)
         )
 
     def delete(
@@ -3276,7 +3431,7 @@ class MergeStore:
                 writer = writer.partitionBy(self.partition_by)
             writer.save(staging)
             self._check_observed(obs, staging)
-            dvdir = os.path.join(staging, self._DV)
+            dvdir = os.path.join(staging, _DV)
             os.makedirs(dvdir, exist_ok=True)
             dvtmp = scratch + ".dv"
             newdv.write.mode("overwrite").parquet(dvtmp)
@@ -3421,7 +3576,7 @@ class MergeStore:
             )
         try:
             _link_tree(self._version_dir(base), staging)
-            dvdir = os.path.join(staging, self._DV)
+            dvdir = os.path.join(staging, _DV)
             os.makedirs(dvdir, exist_ok=True)
             for fname in os.listdir(scratch):
                 if fname.startswith(("_", ".")):
@@ -3843,7 +3998,7 @@ class MergeStore:
             )
         newest_committed = None
         for v in live:
-            manifest = os.path.join(self._commits_dir(), f"{v}.json")
+            manifest = _commit_path(self.path, v)
             if os.path.isfile(manifest):
                 newest_committed = v
         if newest_committed is not None and _vnum(newest_committed) > _vnum(
@@ -3857,10 +4012,8 @@ class MergeStore:
             )
         for v in live:
             vdir = self._version_dir(v)
-            try:
-                with open(os.path.join(vdir, self._FILES)) as f:
-                    manifest = json.load(f)
-            except (OSError, ValueError):
+            manifest = read_manifest(self.path, v)
+            if manifest is None:
                 continue  # pre-manifest snapshot: directory scan reads
             for rel, size in manifest.items():
                 full = os.path.join(vdir, rel)

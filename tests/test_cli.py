@@ -170,6 +170,133 @@ def test_cli_curated_partitioned_store(spark, tmp_path):
     assert any(d.startswith("_bucket=") for d in os.listdir(vdir))
 
 
+def test_cli_curated_partition_buckets_sets_bucket_count(spark, tmp_path):
+    """``--partition-buckets N`` buckets the store into 0..N-1."""
+    raw_dir = str(tmp_path / "raw")
+    dims_dir = str(tmp_path / "dims")
+    store_dir = str(tmp_path / "bstore")
+    spark.createDataFrame(
+        [_row(lid=f"L{i}") for i in range(1, 13)], RAW_SCHEMA
+    ).write.parquet(raw_dir)
+    _write_dims(spark, dims_dir)
+    rc = main(
+        [
+            "curated",
+            "--raw-dirs", raw_dir,
+            "--dims-dir", dims_dir,
+            "--store", store_dir,
+            "--partition-buckets", "8",
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    from etl_pipeline_4handling_listings_spark.sources.store import MergeStore
+
+    store = MergeStore(
+        spark, store_dir, keys=["mls", "mls_listing_id"], partition_by="_bucket"
+    )
+    assert store.read().count() == 12
+    vdir = os.path.join(store_dir, store.current_version())
+    buckets = {
+        int(d.split("=", 1)[1]) for d in os.listdir(vdir) if d.startswith("_bucket=")
+    }
+    assert buckets and buckets <= set(range(8))
+
+
+def test_cli_curated_keeps_the_store_bucket_count(spark, tmp_path):
+    """A store keeps the bucket count it was created with: a day run
+    with another ``--partition-buckets`` is refused before it writes
+    (a pruned merge would miss the updated key's old bucket and
+    duplicate the key); the same count updates in place."""
+    import pytest
+
+    from etl_pipeline_4handling_listings_spark.sources.store import MergeStore
+
+    dims_dir = str(tmp_path / "dims")
+    store_dir = str(tmp_path / "bstore")
+    _write_dims(spark, dims_dir)
+    day0 = str(tmp_path / "raw0")
+    spark.createDataFrame(
+        [_row(lid=f"L{i}") for i in range(1, 13)], RAW_SCHEMA
+    ).write.parquet(day0)
+    day1 = str(tmp_path / "raw1")
+    spark.createDataFrame(
+        [_row(lid="L1", as_of=TS(2024, 1, 2), load_date="20240102")],
+        RAW_SCHEMA,
+    ).write.parquet(day1)
+
+    def run(raw_dir, n):
+        return main(
+            [
+                "curated",
+                "--raw-dirs", raw_dir,
+                "--dims-dir", dims_dir,
+                "--store", store_dir,
+                "--partition-buckets", str(n),
+            ],
+            spark=spark,
+        )
+
+    assert run(day0, 8) == 0
+    store = MergeStore(
+        spark, store_dir, keys=["mls", "mls_listing_id"], partition_by="_bucket"
+    )
+    assert store.table_meta()["n_buckets"] == 8
+    before = store.current_version()
+    with pytest.raises(ValueError, match="bucketed into 8 buckets"):
+        run(day1, 16)
+    assert store.current_version() == before
+    assert run(day1, 8) == 0
+    rows = store.read().collect()
+    assert len(rows) == 12
+    assert len({r["mls_listing_id"] for r in rows}) == 12
+    (l1,) = [r for r in rows if r["mls_listing_id"] == "L1"]
+    assert l1["source_as_of_date"] == TS(2024, 1, 2)
+
+
+def test_bucket_count_of_a_store_without_a_recorded_count_is_64(spark, tmp_path):
+    """Stores created before the count was recorded were all bucketed
+    into 64; a non-positive count is refused outright."""
+    import pytest
+
+    from etl_pipeline_4handling_listings_spark.plans.cli import build_parser
+    from etl_pipeline_4handling_listings_spark.sources.store import MergeStore
+
+    path = str(tmp_path / "legacy")
+    legacy = MergeStore(spark, path, keys=["k"], partition_by="_bucket")
+    legacy.create_if_absent(spark.createDataFrame([(1, 0)], "k INT, _bucket INT"))
+    assert "n_buckets" not in legacy.table_meta()
+    assert legacy.bucket_count() == 64
+    assert MergeStore(
+        spark, path, keys=["k"], partition_by="_bucket", n_buckets=64
+    ).bucket_count() == 64
+    with pytest.raises(ValueError, match="bucketed into 64 buckets"):
+        MergeStore(
+            spark, path, keys=["k"], partition_by="_bucket", n_buckets=16
+        ).bucket_count()
+    with pytest.raises(ValueError, match="n_buckets must be >= 1"):
+        MergeStore(spark, path, keys=["k"], n_buckets=0)
+    argv = ["curated", "--raw-dirs", "r", "--dims-dir", "d", "--store", "s"]
+    for bad in ("0", "-4"):
+        with pytest.raises(SystemExit):
+            build_parser().parse_args([*argv, "--partition-buckets", bad])
+
+
+def test_cli_history_has_no_partition_buckets_flag(tmp_path):
+    """The history store is never bucketed, so the flag is curated-only
+    rather than silently ignored."""
+    import pytest
+
+    from etl_pipeline_4handling_listings_spark.plans.cli import build_parser
+
+    argv = ["--raw-dirs", "r", "--dims-dir", "d", "--store", "s"]
+    assert build_parser().parse_args(
+        ["curated", *argv, "--partition-buckets", "8"]
+    ).partition_buckets == 8
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(["history", *argv, "--partition-buckets", "8"])
+
+
 def test_read_json_lenient_splits_corrupt_rows(spark, tmp_path):
     from pyspark.sql import types as T
 
