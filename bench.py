@@ -14,7 +14,9 @@ lost the front of the single long line: BENCH_r02 parsed: null).
 metric); ``queries`` carries per-query wall time for the FULL
 registry so per-operator regressions are visible. A query that
 throws gets the sentinel -1.0 in the map and is excluded from every
-total.
+total; every exception the bench survives (warm-up, shared builds,
+timed runs, re-runs, the pipeline line) is named in the payload's
+``errors`` map as ``"ExceptionClass: message"``.
 
 Each query is executed fully (noop sink — no driver collect, no
 result materialization skew) after a warm-up of the session. Wall
@@ -88,14 +90,14 @@ def main() -> None:
     spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
+    errors: dict[str, str] = {}
     all_names = list(REGISTRY)
     for name in all_names:
-        try:
-            REGISTRY[name].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
+        _attempt(
+            errors,
+            f"warmup.{name}",
+            lambda: _run_noop(REGISTRY, name, spark, warm_dir),
+        )
 
     # drop warm-up cached RDDs so the timed pass starts clean
     spark.catalog.clearCache()
@@ -105,42 +107,22 @@ def main() -> None:
     # pass and report its cost as its own line item, so it neither
     # lands on whichever graph query happens to run first nor
     # silently disappears into the 2-run minimum
-    t0 = time.perf_counter()
-    try:
-        from etl_pipeline_4handling_listings_spark.queries import (
-            _copresence_edges_cached,
-        )
+    from etl_pipeline_4handling_listings_spark.queries import (
+        _copresence_edges_cached,
+        _tokens,
+    )
 
-        _copresence_edges_cached(spark, sf_dir)
-        edge_build = round(time.perf_counter() - t0, 3)
-    except Exception:
-        edge_build = -1.0
+    edge_build = _timed(
+        errors,
+        "shared_edge_build_sec",
+        lambda: _copresence_edges_cached(spark, sf_dir),
+    )
     # same for the retrieval family's shared (doc_id, word) stream
-    t0 = time.perf_counter()
-    try:
-        from etl_pipeline_4handling_listings_spark.queries import _tokens
+    token_build = _timed(
+        errors, "shared_token_build_sec", lambda: _tokens(spark, sf_dir)
+    )
 
-        _tokens(spark, sf_dir)
-        token_build = round(time.perf_counter() - t0, 3)
-    except Exception:
-        token_build = -1.0
-
-    times: dict[str, float] = {}
-    for name in all_names:
-        fn = REGISTRY[name].fn
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times[name] = round(time.perf_counter() - t0, 3)
-        except Exception:
-            # one broken query must not kill the whole bench line;
-            # a sentinel makes the failure visible in BENCH_r{N}.json
-            times[name] = -1.0
-        # per-query isolation: queries that persist() intermediates
-        # (budget_select, unigram LM) must not squat on block-manager
-        # memory during LATER queries' shuffles — measured up to 3x
-        # inflation on heap-heavy queries downstream of a leak
-        spark.catalog.clearCache()
+    times = time_queries(spark, REGISTRY, sf_dir, errors)
 
     # honesty guard: single runs of the slower (>1 s) queries move
     # round-over-round on GC/JIT/concurrent-suite noise alone (the
@@ -155,24 +137,27 @@ def main() -> None:
     for name in all_names:
         if times.get(name, -1.0) <= 1.0:
             continue
-        t0 = time.perf_counter()
-        try:
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times[name] = min(
-                times[name], round(time.perf_counter() - t0, 3)
-            )
+        # a failed re-run keeps the first run's number
+        t = _timed(
+            errors,
+            f"rerun.{name}",
+            lambda: _run_noop(REGISTRY, name, spark, sf_dir),
+        )
+        if t >= 0:
+            times[name] = min(times[name], t)
             runs[name] = 2
-        except Exception:
-            pass  # keep the first run's number
         spark.catalog.clearCache()
 
     # sentinels stay visible in the map but never deflate a total
     total = round(sum(times[n] for n in HEADLINE if times.get(n, -1.0) >= 0), 3)
     registry_total = round(sum(t for t in times.values() if t >= 0), 3)
-    _pipeline_throughput(spark, 5_000)  # warm the pipeline plan shapes
-    pipeline = _pipeline_throughput(spark)
+    # warm the pipeline plan shapes
+    _attempt(
+        errors, "pipeline_warmup", lambda: _pipeline_throughput(spark, 5_000)
+    )
+    pipeline = _attempt(
+        errors, "pipeline_rows_per_sec", lambda: _pipeline_throughput(spark)
+    )
     summary = {
         "metric": "headline_queries_total",
         "value": total,
@@ -187,12 +172,66 @@ def main() -> None:
         **summary,
         "queries": times,
         "query_runs": {n: r for n, r in runs.items() if r > 1},
+        "errors": errors,
     }
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo_dir, "BENCH_LOCAL.json"), "w") as f:
         json.dump(full, f, indent=1)
     print_payload(summary, full)
     spark.stop()
+
+
+def _error(e: BaseException) -> str:
+    """``ExceptionClass: message`` (the message's first line: JVM
+    errors carry their whole stack trace after it)."""
+    lines = str(e).strip().splitlines()
+    return f"{type(e).__name__}: {lines[0] if lines else ''}"
+
+
+def _attempt(errors: dict, key: str, fn):
+    """``fn()``, or ``None`` with the exception named under ``key`` in
+    ``errors``: one failure must not kill the bench line, and must not
+    vanish either."""
+    try:
+        return fn()
+    except Exception as e:
+        errors[key] = _error(e)
+        return None
+
+
+def _timed(errors: dict, key: str, fn) -> float:
+    """Wall seconds of ``fn()``, or -1.0 with its exception named."""
+    t0 = time.perf_counter()
+    try:
+        fn()
+    except Exception as e:
+        errors[key] = _error(e)
+        return -1.0
+    return round(time.perf_counter() - t0, 3)
+
+
+def _run_noop(registry, name: str, spark, sf_dir: str) -> None:
+    registry[name].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+
+def time_queries(spark, registry, sf_dir: str, errors: dict) -> dict:
+    """One timed noop run of every query in ``registry``. A query
+    that throws gets the sentinel -1.0 (one broken query must not
+    kill the whole bench line) and its exception under its name in
+    ``errors``."""
+    times: dict[str, float] = {}
+    for name in registry:
+        times[name] = _timed(
+            errors, name, lambda: _run_noop(registry, name, spark, sf_dir)
+        )
+        # per-query isolation: queries that persist() intermediates
+        # (budget_select, unigram LM) must not squat on block-manager
+        # memory during LATER queries' shuffles — measured up to 3x
+        # inflation on heap-heavy queries downstream of a leak
+        spark.catalog.clearCache()
+    return times
 
 
 def print_payload(summary: dict, full: dict) -> None:
@@ -205,7 +244,7 @@ def print_payload(summary: dict, full: dict) -> None:
     print(json.dumps(full), flush=True)
 
 
-def _pipeline_throughput(spark, n_rows: int = 200_000) -> float | None:
+def _pipeline_throughput(spark, n_rows: int = 200_000) -> float:
     """End-to-end curated-load throughput (rows/sec): generate
     listings-shaped rows, run validate→transform→dedup→MERGE into a
     fresh store — the reference's daily-load workload."""
@@ -220,70 +259,67 @@ def _pipeline_throughput(spark, n_rows: int = 200_000) -> float | None:
     )
     from etl_pipeline_4handling_listings_spark.sources.store import MergeStore
 
+    raw = (
+    spark.range(n_rows)
+        .select(
+            F.concat(F.lit("MLS"), (F.col("id") % 5).cast("string")).alias("mls"),
+            F.concat(F.lit("L"), (F.col("id") % (n_rows // 2)).cast("string")).alias(
+                "mls_listing_id"
+            ),
+            F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias(
+                "source_as_of_date"
+            ),
+            F.lit("20240101").alias("load_date"),
+            F.lit("2024-01-01").cast("date").alias("listing_date"),
+            F.lit("2024-01-01").cast("date").alias("entry_date"),
+            F.when(F.col("id") % 17 == 0, "Z").otherwise("A").alias(
+                "listing_status"
+            ),
+            (F.col("id") % 900000 + 1000).cast("decimal(16,4)").alias(
+                "current_price"
+            ),
+            F.lit(None).cast("decimal(16,4)").alias("closed_price"),
+            F.lit("Sale").alias("rent_sale"),
+            F.lit("SF").alias("property_type"),
+            F.lit("House").alias("property_sub_type"),
+            F.lit("CO").alias("state_raw"),
+            F.lit("80001").alias("zip_raw"),
+            F.concat((F.col("id") % 999).cast("string"), F.lit(" Main St")).alias(
+                "street_address_raw"
+            ),
+            F.col("id").cast("string").alias("source_listing_id"),
+            F.lit("(303) 555-1234").alias("owner_phone"),
+            F.timestamp_seconds(F.lit(1700000000)).alias("create_timestamp"),
+            F.lit(None).cast("long").alias("asg_primary_id"),
+            F.lit(None).cast("timestamp").alias("asg_primary_id_queried_ts"),
+        )
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    dims = ListingsDims(
+        boards=spark.createDataFrame(
+            [(f"MLS{i}", None) for i in range(5)], "mls STRING, movedto STRING"
+        ),
+        states=spark.createDataFrame(
+            [("CO", "Colorado")], "state STRING, name STRING"
+        ),
+        zipcodes=spark.createDataFrame(
+            [("80001", "CO")], "zipcode STRING, state STRING"
+        ),
+        property_sub_types=spark.createDataFrame(
+            [("House",)], "property_sub_type STRING"
+        ),
+    )
+    tmp = tempfile.mkdtemp(prefix="bench_store_")
     try:
-        raw = (
-            spark.range(n_rows)
-            .select(
-                F.concat(F.lit("MLS"), (F.col("id") % 5).cast("string")).alias("mls"),
-                F.concat(F.lit("L"), (F.col("id") % (n_rows // 2)).cast("string")).alias(
-                    "mls_listing_id"
-                ),
-                F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias(
-                    "source_as_of_date"
-                ),
-                F.lit("20240101").alias("load_date"),
-                F.lit("2024-01-01").cast("date").alias("listing_date"),
-                F.lit("2024-01-01").cast("date").alias("entry_date"),
-                F.when(F.col("id") % 17 == 0, "Z").otherwise("A").alias(
-                    "listing_status"
-                ),
-                (F.col("id") % 900000 + 1000).cast("decimal(16,4)").alias(
-                    "current_price"
-                ),
-                F.lit(None).cast("decimal(16,4)").alias("closed_price"),
-                F.lit("Sale").alias("rent_sale"),
-                F.lit("SF").alias("property_type"),
-                F.lit("House").alias("property_sub_type"),
-                F.lit("CO").alias("state_raw"),
-                F.lit("80001").alias("zip_raw"),
-                F.concat((F.col("id") % 999).cast("string"), F.lit(" Main St")).alias(
-                    "street_address_raw"
-                ),
-                F.col("id").cast("string").alias("source_listing_id"),
-                F.lit("(303) 555-1234").alias("owner_phone"),
-                F.timestamp_seconds(F.lit(1700000000)).alias("create_timestamp"),
-                F.lit(None).cast("long").alias("asg_primary_id"),
-                F.lit(None).cast("timestamp").alias("asg_primary_id_queried_ts"),
-            )
-            .repartition(spark.sparkContext.defaultParallelism)
+        store = MergeStore(
+            spark, os.path.join(tmp, "store"), keys=["mls", "mls_listing_id"]
         )
-        dims = ListingsDims(
-            boards=spark.createDataFrame(
-                [(f"MLS{i}", None) for i in range(5)], "mls STRING, movedto STRING"
-            ),
-            states=spark.createDataFrame(
-                [("CO", "Colorado")], "state STRING, name STRING"
-            ),
-            zipcodes=spark.createDataFrame(
-                [("80001", "CO")], "zipcode STRING, state STRING"
-            ),
-            property_sub_types=spark.createDataFrame(
-                [("House",)], "property_sub_type STRING"
-            ),
-        )
-        tmp = tempfile.mkdtemp(prefix="bench_store_")
-        try:
-            store = MergeStore(
-                spark, os.path.join(tmp, "store"), keys=["mls", "mls_listing_id"]
-            )
-            t0 = time.perf_counter()
-            run_curated_load(raw, dims, store)
-            elapsed = time.perf_counter() - t0
-            return round(n_rows / elapsed, 1)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:
-        return None
+        t0 = time.perf_counter()
+        run_curated_load(raw, dims, store)
+        elapsed = time.perf_counter() - t0
+        return round(n_rows / elapsed, 1)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -10,10 +10,10 @@ directory): about 0.2 CPU-s per task on a 4-vCPU VM, however few
 rows the task moves. A ``pyarrow.Table`` input becomes a JVM-side
 ``LocalRelation`` instead, so consuming it starts no Python task.
 
-Every small driver-built frame in ``sources/``, ``operators/`` and
-``plans/`` goes through :func:`arrow_frame`;
-``tests/test_python_boundary.py`` fails on any other ``createDataFrame``
-call there.
+Every small driver-built frame in ``sources/``, ``operators/``,
+``plans/``, ``streaming/`` and ``queries.py`` goes through
+:func:`arrow_frame`; ``tests/test_python_boundary.py`` fails on any
+other ``createDataFrame`` call there.
 """
 
 from __future__ import annotations

@@ -34,7 +34,10 @@ from etl_pipeline_4handling_listings_spark.plans.listings import (
     run_history_load,
 )
 from etl_pipeline_4handling_listings_spark.session import get_spark
-from etl_pipeline_4handling_listings_spark.sources.readers import read_union
+from etl_pipeline_4handling_listings_spark.sources.readers import (
+    open_parquet,
+    read_union,
+)
 from etl_pipeline_4handling_listings_spark.sources.store import MergeStore
 from etl_pipeline_4handling_listings_spark.sources.writers import (
     write_export,
@@ -99,7 +102,7 @@ def _load_raw(spark: SparkSession, args: argparse.Namespace):
 
 def _load_dims(spark: SparkSession, dims_dir: str) -> ListingsDims:
     def t(name: str):
-        return spark.read.parquet(f"{dims_dir}/{name}.parquet")
+        return open_parquet(spark, f"{dims_dir}/{name}.parquet")
 
     return ListingsDims(
         boards=t("boards"),

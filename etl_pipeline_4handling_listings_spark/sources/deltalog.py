@@ -14,14 +14,14 @@ with stock Delta clients. This module closes that:
   Trino / DuckDB-delta read the table — current state AND time
   travel across every retained version.
 - :func:`read_delta` replays a ``_delta_log`` written by ANY Delta
-  client with plain Spark: checkpoint (single- or multi-part) +
-  JSON tail are read as DataFrames, the add/remove reconciliation
-  is a window over the union (distributed — a 100 TB table's
-  checkpoint has millions of add rows; none of this collects more
-  than the distinct-partition list), and the reconstructed file
-  set is scanned with the ordinary parquet reader. Version- and
-  timestamp-based time travel use Delta's own resolution rules
-  (log-entry file modification time).
+  client on the driver, with no Spark job: checkpoint (single- or
+  multi-part, V2 sidecars included) through pyarrow + JSON tail,
+  reconciled by path in Python (:func:`_py_actions`,
+  :func:`_py_live_adds` — the same replay every DML verb and the
+  streaming source use), and the reconstructed file set is scanned
+  with the ordinary parquet reader. Version- and timestamp-based
+  time travel use Delta's own resolution rules (log-entry file
+  modification time).
 
 Deletion vectors round-trip BOTH directions: foreign logs' DVs are
 APPLIED on read (spec decode in ``dvcodec``, row-index anti-join on
@@ -43,7 +43,9 @@ Scale notes: export walks only the per-snapshot file manifests
 checkpoint via Arrow on the driver — one row per live file, the
 same driver-side cost Delta's own checkpointing pays; the
 PROTOCOL.md multi-part escape hatch is the 100 TB path and is
-accepted on read. Replay on read is fully distributed.
+accepted on read. Replay on read holds one dict per log action on
+the driver: the scan's file list needs every live add there anyway,
+as every Spark scan's file index does.
 """
 
 from __future__ import annotations
@@ -58,11 +60,16 @@ from urllib.parse import quote, unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..arrowframe import arrow_frame
 from .hivepath import DEFAULT_PARTITION, hive_part_str
-from .store import MergeStore, _vnum, read_commit_record, snapshot_files
+from .store import (
+    MergeStore,
+    _vnum,
+    read_commit_record,
+    read_dv_positions,
+    snapshot_files,
+)
 
 
 class DeltaProtocolError(RuntimeError):
@@ -82,120 +89,6 @@ _CKPT_CLASSIC_RE = re.compile(
     r"^(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet$"
 )
 
-# classic-checkpoint/action shapes from PROTOCOL.md — the explicit
-# schema means JSON replay never depends on Spark's struct
-# inference (which would fuse partitionValues keys across commits)
-_ACTION_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "add",
-            T.StructType(
-                [
-                    T.StructField("path", T.StringType()),
-                    T.StructField(
-                        "partitionValues",
-                        T.MapType(T.StringType(), T.StringType()),
-                    ),
-                    T.StructField("size", T.LongType()),
-                    T.StructField("modificationTime", T.LongType()),
-                    T.StructField("dataChange", T.BooleanType()),
-                    T.StructField("stats", T.StringType()),
-                    T.StructField(
-                        "deletionVector",
-                        T.StructType(
-                            [
-                                T.StructField(
-                                    "storageType", T.StringType()
-                                ),
-                                T.StructField(
-                                    "pathOrInlineDv", T.StringType()
-                                ),
-                                T.StructField("offset", T.IntegerType()),
-                                T.StructField(
-                                    "sizeInBytes", T.IntegerType()
-                                ),
-                                T.StructField(
-                                    "cardinality", T.LongType()
-                                ),
-                            ]
-                        ),
-                    ),
-                ]
-            ),
-        ),
-        T.StructField(
-            "remove",
-            T.StructType(
-                [
-                    T.StructField("path", T.StringType()),
-                    T.StructField("deletionTimestamp", T.LongType()),
-                    T.StructField("dataChange", T.BooleanType()),
-                ]
-            ),
-        ),
-        T.StructField(
-            "metaData",
-            T.StructType(
-                [
-                    T.StructField("id", T.StringType()),
-                    T.StructField("name", T.StringType()),
-                    T.StructField("description", T.StringType()),
-                    T.StructField(
-                        "format",
-                        T.StructType(
-                            [
-                                T.StructField(
-                                    "provider", T.StringType()
-                                ),
-                                T.StructField(
-                                    "options",
-                                    T.MapType(
-                                        T.StringType(), T.StringType()
-                                    ),
-                                ),
-                            ]
-                        ),
-                    ),
-                    T.StructField("schemaString", T.StringType()),
-                    T.StructField(
-                        "partitionColumns",
-                        T.ArrayType(T.StringType()),
-                    ),
-                    T.StructField(
-                        "configuration",
-                        T.MapType(T.StringType(), T.StringType()),
-                    ),
-                    T.StructField("createdTime", T.LongType()),
-                ]
-            ),
-        ),
-        T.StructField(
-            "protocol",
-            T.StructType(
-                [
-                    T.StructField("minReaderVersion", T.IntegerType()),
-                    T.StructField("minWriterVersion", T.IntegerType()),
-                    T.StructField(
-                        "readerFeatures", T.ArrayType(T.StringType())
-                    ),
-                    T.StructField(
-                        "writerFeatures", T.ArrayType(T.StringType())
-                    ),
-                ]
-            ),
-        ),
-        T.StructField(
-            "txn",
-            T.StructType(
-                [
-                    T.StructField("appId", T.StringType()),
-                    T.StructField("version", T.LongType()),
-                    T.StructField("lastUpdated", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 # reader-version-3 table features this replay implements; anything
 # else in readerFeatures is a named refusal (variantType stays
@@ -413,23 +306,6 @@ def _export_dv_descriptor(store, version: str, rel_snap: str, positions):
     }
 
 
-def _version_dv_map(store, version: str) -> dict[str, list[int]]:
-    """rel-file -> deleted row indexes for ``version``'s MergeStore
-    DV sidecar (empty when none). Collected to the driver: sized by
-    the snapshot's DELETED rows — the export is an explicit interop
-    operation and this matches the driver-side cost its checkpoint
-    write already pays per live file."""
-    dv = store._dv_frame(version)
-    if dv is None:
-        return {}
-    rows = (
-        dv.groupBy("_dv_file")
-        .agg(F.collect_list("_dv_pos").alias("ps"))
-        .collect()
-    )
-    return {r["_dv_file"]: list(r["ps"]) for r in rows}
-
-
 def _version_adds(store, version: str) -> list[dict]:
     """One add action per data file of ``version``, paths relative
     to the TABLE root (``vNNNNN/...``) — legal per PROTOCOL.md
@@ -437,8 +313,10 @@ def _version_adds(store, version: str) -> list[dict]:
     subdirectories are exactly how Delta lays out partitions).
     MergeStore deletion vectors attach as spec descriptors (inline
     for small counts, ``_dv_export/`` files above the threshold) —
-    their (file, row_index) model is exactly Delta's."""
-    dv_map = _version_dv_map(store, version)
+    their (file, row_index) model is exactly Delta's. The sidecars
+    are read on the driver: sized by the snapshot's DELETED rows, the
+    same driver-side cost the checkpoint write pays per live file."""
+    dv_map = read_dv_positions(store.path, version)
     sizes = snapshot_files(store.path, version) or {}
     adds = []
     vdir = store._version_dir(version)
@@ -1303,8 +1181,9 @@ def _select_ckpt_files(files: list[str]) -> list[str]:
 
 
 def _py_check_protocol(proto: dict) -> None:
-    """Pure-Python twin of :func:`_check_protocol` for paths with no
-    SparkSession in scope (streaming tail source, CDF reader)."""
+    """Refuse a table whose reader features this engine does not
+    implement (reader version 2 is column mapping, whose use is
+    checked against the metaData configuration)."""
     mrv = int(proto.get("minReaderVersion") or 1)
     if mrv <= 2:
         return
@@ -1315,6 +1194,25 @@ def _py_check_protocol(proto: dict) -> None:
             f"table requires reader features {sorted(unsupported)} "
             "this engine does not implement"
         )
+
+
+def _py_latest(actions: list) -> tuple[dict | None, dict | None]:
+    """(protocol, metaData) in force after a replay: the last of
+    each, or ``None`` when the log has none."""
+    proto = meta = None
+    for _v, a in actions:
+        if a.get("metaData") is not None:
+            meta = a["metaData"]
+        elif a.get("protocol") is not None:
+            proto = a["protocol"]
+    return proto, meta
+
+
+def _dv_desc(add: dict) -> dict | None:
+    """An add's deletion-vector descriptor, or ``None`` when it has
+    none (checkpoint rows carry a null-filled struct)."""
+    dv = add.get("deletionVector")
+    return dv if dv is not None and dv.get("storageType") else None
 
 
 def _latest_log_version(log_dir: str) -> int:
@@ -1328,20 +1226,21 @@ def _latest_log_version(log_dir: str) -> int:
 
 
 def _py_actions(
-    log_dir: str, version: int | None = None
+    log_dir: str, version: int | None = None, timestamp=None, tz=None
 ) -> tuple[int, list[tuple[int, dict]]]:
-    """Pure-Python (driver-side) replay: (resolved version,
-    [(commit_version, action_dict), ...] in replay order). Used by
-    the streaming tail source (sources/deltastream.py), whose
+    """Driver-side log replay, the only one: (resolved version,
+    [(commit_version, action_dict), ...] in replay order) at
+    ``version`` or ``timestamp`` (see :func:`_replay_plan`), else the
+    head. It runs no Spark job, so the streaming tail source, whose
     ``schema()``/offset planning runs where no SparkSession is
-    guaranteed. Metadata-scale: one dict per action — the same
-    driver-side cardinality Spark's own file index holds; the DATA
-    files are never touched here. Checkpoint map columns
+    guaranteed, uses it too. Metadata-scale: one dict per action —
+    the same driver-side cardinality Spark's own file index holds;
+    the DATA files are never touched here. Checkpoint map columns
     (partitionValues) arrive as pyarrow key/value pair lists and are
     normalized to dicts."""
     import pyarrow.parquet as pq
 
-    target, ckpt_files, tail = _replay_plan(log_dir, version, None)
+    target, ckpt_files, tail = _replay_plan(log_dir, version, timestamp, tz)
     out: list[tuple[int, dict]] = []
 
     def norm(v):
@@ -1383,158 +1282,6 @@ def _py_actions(
                 if line:
                     out.append((v, json.loads(line)))
     return target, out
-
-
-def _conform(
-    avail: T.DataType | None, path: str, want: T.DataType
-):
-    """Column expression conforming ``path`` in the source frame to
-    ``want``, null-filling absent (sub)fields — a struct cast in
-    Spark needs identical field counts, which foreign checkpoints
-    (extra stats_parsed, missing deletionVector) never guarantee."""
-    if avail is None:
-        return F.lit(None).cast(want)
-    if isinstance(want, T.StructType):
-        if not isinstance(avail, T.StructType):
-            return F.lit(None).cast(want)
-        by_name = {f.name: f.dataType for f in avail.fields}
-        built = F.struct(
-            *[
-                _conform(
-                    by_name.get(f.name), f"{path}.{f.name}", f.dataType
-                ).alias(f.name)
-                for f in want.fields
-            ]
-        )
-        # a null source struct must stay null, not become a struct
-        # of nulls (action-presence tests rely on it)
-        return F.when(F.col(path).isNotNull(), built)
-    return F.col(path).cast(want)
-
-
-def _conformed_actions(ck: DataFrame, ckv: int) -> DataFrame:
-    avail = {f.name: f.dataType for f in ck.schema.fields}
-    return ck.select(
-        F.lit(ckv).alias("_commit"),
-        *[
-            _conform(avail.get(f), f, _ACTION_SCHEMA[f].dataType).alias(f)
-            for f in _ACTION_SCHEMA.fieldNames()
-        ],
-    )
-
-
-def _read_actions(
-    spark: SparkSession, ckpt_files: list[str], tail: list[str]
-) -> DataFrame:
-    """Every action with its commit version, as ONE DataFrame:
-    checkpoint rows at the checkpoint version, JSON rows at the
-    version their file name carries. Distributed — no collect.
-
-    V2 (UUID-named) checkpoints may hold their file actions in
-    SIDECAR parquet files under ``_delta_log/_sidecars/`` — the
-    ``sidecar`` actions name them (metadata-scale, one per sidecar
-    file); their add/remove rows join the replay at the checkpoint
-    version exactly like inline ones."""
-    frames = []
-    if ckpt_files:
-        ck = spark.read.parquet(*ckpt_files)
-        m = _CKPT_RE.match(os.path.basename(ckpt_files[0]))
-        ckv = int(m.group(1))
-        frames.append(_conformed_actions(ck, ckv))
-        if "sidecar" in ck.columns:
-            log_dir = os.path.dirname(ckpt_files[0])
-            sc_paths = [
-                r["p"]
-                for r in ck.where(F.col("sidecar.path").isNotNull())
-                .select(F.col("sidecar.path").alias("p"))
-                .collect()
-            ]
-            sc_files = [
-                p
-                if "://" in p or os.path.isabs(p)
-                else os.path.join(log_dir, "_sidecars", unquote(p))
-                for p in sc_paths
-            ]
-            if sc_files:
-                frames.append(
-                    _conformed_actions(
-                        spark.read.parquet(*sc_files), ckv
-                    )
-                )
-    if tail:
-        txt = spark.read.text(tail).select(
-            F.from_json("value", _ACTION_SCHEMA).alias("a"),
-            F.regexp_extract(
-                F.col("_metadata.file_name"), r"^(\d{20})\.json$", 1
-            )
-            .cast("long")
-            .alias("_commit"),
-        )
-        frames.append(
-            txt.select(
-                "_commit",
-                *[F.col(f"a.{f}").alias(f) for f in _ACTION_SCHEMA.fieldNames()],
-            )
-        )
-    out = frames[0]
-    for fdf in frames[1:]:
-        out = out.unionByName(fdf)
-    return out
-
-
-def _live_adds(actions: DataFrame) -> DataFrame:
-    """Reconcile add/remove by path: the latest action per path
-    wins. Within ONE commit a path may legally appear in BOTH a
-    remove and an add (delta-spark's DV delete re-adds the same
-    file with a new deletionVector and removes the old incarnation)
-    — per the spec's reconciliation the add defines the new state,
-    so the tie-break prefers the add row. Pure window over the
-    distributed union."""
-    fa = actions.select(
-        "_commit",
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias(
-            "path"
-        ),
-        F.col("add").alias("add"),
-    ).where(F.col("path").isNotNull())
-    w = Window.partitionBy("path").orderBy(
-        F.col("_commit").desc(), F.col("add").isNotNull().desc()
-    )
-    return (
-        fa.withColumn("_rn", F.row_number().over(w))
-        .where((F.col("_rn") == 1) & F.col("add").isNotNull())
-        .select("add")
-    )
-
-
-def _latest_single(actions: DataFrame, field: str):
-    row = (
-        actions.where(F.col(field).isNotNull())
-        .orderBy(F.col("_commit").desc())
-        .select(field)
-        .limit(1)
-        .collect()
-    )
-    return row[0][0] if row else None
-
-
-def _check_protocol(proto) -> None:
-    if proto is None:
-        return
-    mrv = proto["minReaderVersion"] or 1
-    if mrv <= 1:
-        return
-    feats = set(proto["readerFeatures"] or []) if mrv >= 3 else None
-    if mrv == 2:
-        # column mapping capability; actual use is checked via the
-        # metaData configuration below
-        return
-    unsupported = (feats or set()) - _SUPPORTED_READER_FEATURES
-    if unsupported:
-        raise DeltaProtocolError(
-            f"table requires reader features {sorted(unsupported)} "
-            "this engine does not implement"
-        )
 
 
 def _physical_schema(
@@ -1623,16 +1370,8 @@ def _apply_dvs(
     (common) case."""
     from .dvcodec import load_dv_indexes
 
-    def _opt(d, k):
-        # descriptors arrive as Spark Rows (fixed schema, nulls for
-        # absent fields) OR as raw log dicts, where optional fields
-        # — offset on inline ('i') DVs, sizeInBytes from lax
-        # writers — may be MISSING entirely
-        try:
-            return d[k]
-        except (KeyError, ValueError, IndexError):
-            return None
-
+    # descriptors are raw log dicts: optional fields — offset on
+    # inline ('i') DVs, sizeInBytes from lax writers — may be absent
     desc_df = arrow_frame(
         spark,
         [
@@ -1640,8 +1379,8 @@ def _apply_dvs(
                 os.path.abspath(f),
                 d["storageType"],
                 d["pathOrInlineDv"],
-                _opt(d, "offset"),
-                _opt(d, "sizeInBytes"),
+                d.get("offset"),
+                d.get("sizeInBytes"),
             )
             for f, d in dv_descs
         ],
@@ -1669,7 +1408,7 @@ def _apply_dvs(
                 )
 
     parts = _dv_decode_parts(
-        [_opt(d, "cardinality") for _, d in dv_descs],
+        [d.get("cardinality") for _, d in dv_descs],
         int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
         spark.sparkContext.defaultParallelism,
     )
@@ -1716,7 +1455,8 @@ def read_delta(
     timestamp=None,
 ) -> DataFrame:
     """Read a Delta table (any writer) with plain Spark — log
-    replay per PROTOCOL.md, no delta-spark dependency.
+    replay per PROTOCOL.md on the driver (no Spark job before the
+    caller's action), no delta-spark dependency.
 
     ``version`` / ``timestamp`` give Delta time travel (``VERSION
     AS OF`` / ``TIMESTAMP AS OF``; timestamp resolution prefers a
@@ -1760,27 +1500,25 @@ def read_delta(
     log_dir = os.path.join(path, _LOG_DIR)
     if not os.path.isdir(log_dir):
         raise FileNotFoundError(f"{path} has no _delta_log")
-    target, ckpt_files, tail = _replay_plan(
+    _target, actions = _py_actions(
         log_dir, version, timestamp, tz=_session_tz(spark)
     )
-    actions = _read_actions(spark, ckpt_files, tail)
-    proto = _latest_single(actions, "protocol")
-    _check_protocol(proto)
-    meta = _latest_single(actions, "metaData")
+    proto, meta = _py_latest(actions)
+    if proto is not None:
+        _py_check_protocol(proto)
     if meta is None:
         raise DeltaProtocolError("log has no metaData action")
-    cfg = dict(meta["configuration"] or {})
+    cfg = dict(meta.get("configuration") or {})
     cm = cfg.get("delta.columnMapping.mode", "none")
     if cm not in ("", "none", "name", "id"):
         raise DeltaProtocolError(
             f"columnMapping.mode={cm!r} is not supported"
         )
-    if (meta["format"] or {"provider": "parquet"})[
+    provider = (meta.get("format") or {"provider": "parquet"}).get(
         "provider"
-    ] != "parquet":
-        raise DeltaProtocolError(
-            f"format {meta['format']['provider']!r} != parquet"
-        )
+    )
+    if provider != "parquet":
+        raise DeltaProtocolError(f"format {provider!r} != parquet")
     logical = T.StructType.fromJson(json.loads(meta["schemaString"]))
     mapped = cm in ("name", "id")
     schema = (
@@ -1803,7 +1541,7 @@ def read_delta(
         lf.name: pf.name
         for lf, pf in zip(logical.fields, schema.fields)
     }
-    pcols = [phys_of[c] for c in (meta["partitionColumns"] or [])]
+    pcols = [phys_of[c] for c in (meta.get("partitionColumns") or [])]
 
     def _logicalize(df):
         if not mapped:
@@ -1815,21 +1553,16 @@ def read_delta(
             ]
         )
 
-    adds = _live_adds(actions)
     # file list + partition tuples: O(files) strings on the driver,
     # the same scale every Spark scan's file index holds
-    rows = adds.select(
-        F.col("add.path").alias("p"),
-        F.col("add.partitionValues").alias("pv"),
-        F.col("add.deletionVector").alias("dv"),
-    ).collect()
-    if not rows:
+    adds = list(_py_live_adds(actions).values())
+    if not adds:
         return arrow_frame(spark, [], logical)
-    files = [os.path.join(path, unquote(r["p"])) for r in rows]
+    files = [os.path.join(path, unquote(a["path"])) for a in adds]
     dv_descs = [
-        (os.path.join(path, unquote(r["p"])), r["dv"])
-        for r in rows
-        if r["dv"] is not None and r["dv"]["storageType"] is not None
+        (f, dv)
+        for f, a in zip(files, adds)
+        if (dv := _dv_desc(a)) is not None
     ]
 
     def _scan(reader, *fs):
@@ -1856,15 +1589,15 @@ def read_delta(
     # hive fast path: every file sits under dirs that spell out its
     # partitionValues — one basePath scan, partition types from the
     # declared schema
-    def hive_ok(r) -> bool:
-        rel = unquote(r["p"])
+    def hive_ok(a) -> bool:
+        rel = unquote(a["path"])
         if os.path.isabs(rel) or "://" in rel:
             # a shallow clone's absolute-POSIX adds live outside
             # the table root — basePath cannot cover them; the
             # lit-tagged fallback handles those (scheme-qualified
             # URIs remain out of scope for this local engine)
             return False
-        pv = dict(r["pv"] or {})
+        pv = dict(a.get("partitionValues") or {})
         segs = dict(
             s.split("=", 1) for s in rel.split("/")[:-1] if "=" in s
         )
@@ -1878,7 +1611,7 @@ def read_delta(
                 return False
         return True
 
-    if all(hive_ok(r) for r in rows):
+    if all(hive_ok(a) for a in adds):
         return _finish(
             _scan(
                 spark.read.schema(schema).option("basePath", path),
@@ -1888,12 +1621,9 @@ def read_delta(
 
     # general fallback: group by partition tuple, tag, union
     groups: dict[tuple, list[str]] = {}
-    for r in rows:
-        pv = dict(r["pv"] or {})
-        key = tuple(pv.get(c) for c in pcols)
-        groups.setdefault(key, []).append(
-            os.path.join(path, unquote(r["p"]))
-        )
+    for f, a in zip(files, adds):
+        pv = dict(a.get("partitionValues") or {})
+        groups.setdefault(tuple(pv.get(c) for c in pcols), []).append(f)
     parts = []
     by_name = {f.name: f for f in schema.fields}
     # None-safe deterministic order: a null partition value must not
@@ -1952,36 +1682,28 @@ def convert_from_delta(
     log_dir = os.path.join(path, _LOG_DIR)
     if not os.path.isdir(log_dir):
         raise FileNotFoundError(f"{path} has no _delta_log")
-    _target, ckpt_files, tail = _replay_plan(log_dir)
-    actions = _read_actions(spark, ckpt_files, tail)
-    _check_protocol(_latest_single(actions, "protocol"))
-    meta = _latest_single(actions, "metaData")
+    _target, actions = _py_actions(log_dir)
+    proto, meta = _py_latest(actions)
+    if proto is not None:
+        _py_check_protocol(proto)
     if meta is None:
         raise DeltaProtocolError("log has no metaData action")
-    cfg = dict(meta["configuration"] or {})
+    cfg = dict(meta.get("configuration") or {})
     cm = cfg.get("delta.columnMapping.mode", "none")
     if cm not in ("", "none", "name", "id"):
         raise DeltaProtocolError(
             f"columnMapping.mode={cm!r} is not supported"
         )
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = list(meta["partitionColumns"] or [])
+    pcols = list(meta.get("partitionColumns") or [])
     if len(pcols) > 1:
         raise DeltaProtocolError(
             f"MergeStore supports one partition column; table has "
             f"{pcols}"
         )
     pcol = pcols[0] if pcols else None
-    adds = _live_adds(actions)
-    rows = adds.select(
-        F.col("add.path").alias("p"),
-        F.col("add.partitionValues").alias("pv"),
-        F.col("add.deletionVector").alias("dv"),
-    ).collect()
-    has_dv = any(
-        r["dv"] is not None and r["dv"]["storageType"] is not None
-        for r in rows
-    )
+    adds = list(_py_live_adds(actions).values())
+    has_dv = any(_dv_desc(a) is not None for a in adds)
     # column-mapped files spell physical column names (and, in id
     # mode, are only resolvable by parquet field id), so adopting
     # them by reference would leave a store whose files disagree
@@ -2022,16 +1744,14 @@ def convert_from_delta(
     os.makedirs(store._staging_dir(), exist_ok=True)
     staging = os.path.join(store._staging_dir(), uuid.uuid4().hex)
     os.makedirs(staging, exist_ok=True)
-    link_rows = [] if materialize_all else [
-        r
-        for r in rows
-        if r["dv"] is None or r["dv"]["storageType"] is None
+    link_adds = [] if materialize_all else [
+        a for a in adds if _dv_desc(a) is None
     ]
-    for i, r in enumerate(link_rows):
-        src = os.path.join(path, unquote(r["p"]))
+    for i, a in enumerate(link_adds):
+        src = os.path.join(path, unquote(a["path"]))
         ddir = staging
         if pcol is not None:
-            val = dict(r["pv"] or {}).get(pcol)
+            val = dict(a.get("partitionValues") or {}).get(pcol)
             sub = (
                 DEFAULT_PARTITION
                 if val is None
@@ -2063,14 +1783,10 @@ def convert_from_delta(
         # rows must not travel; a hardlink would resurrect them) —
         # clean files above adopted by reference, so the job is
         # sized by the DV'd subset, not the table
-        dv_rows = [
-            r
-            for r in rows
-            if r["dv"] is not None and r["dv"]["storageType"] is not None
-        ]
+        dv_adds = [a for a in adds if _dv_desc(a) is not None]
         dv_descs = [
-            (os.path.join(path, unquote(r["p"])), r["dv"])
-            for r in dv_rows
+            (os.path.join(path, unquote(a["path"])), _dv_desc(a))
+            for a in dv_adds
         ]
         file_schema = T.StructType(
             [f for f in schema.fields if f.name != pcol]
@@ -2092,12 +1808,10 @@ def convert_from_delta(
                 spark,
                 [
                     (
-                        os.path.abspath(
-                            os.path.join(path, unquote(r["p"]))
-                        ),
-                        dict(r["pv"] or {}).get(pcol),
+                        os.path.abspath(f),
+                        dict(a.get("partitionValues") or {}).get(pcol),
                     )
-                    for r in dv_rows
+                    for (f, _dv), a in zip(dv_descs, dv_adds)
                 ],
                 "__fp string, __pv string",
             )
@@ -2208,12 +1922,7 @@ def read_delta_changes(
     # schema + protocol/mapping gates from the pure-Python replay at
     # the range end (metadata-scale)
     _t, all_actions = _py_actions(log_dir, end)
-    meta = proto = None
-    for _v, a in all_actions:
-        if a.get("metaData") is not None:
-            meta = a["metaData"]
-        elif a.get("protocol") is not None:
-            proto = a["protocol"]
+    proto, meta = _py_latest(all_actions)
     if proto is not None:
         _py_check_protocol(proto)
     if meta is None:
@@ -2415,18 +2124,18 @@ def delta_last_txn(
 ) -> int:
     """Delta's (txnAppId -> version) idempotent-writer watermark
     from the log (-1 = none) — the read half of `txn` actions."""
-    log_dir = os.path.join(path, _LOG_DIR)
-    _target, ckpt_files, tail = _replay_plan(log_dir)
-    actions = _read_actions(spark, ckpt_files, tail)
-    row = (
-        actions.where(
-            F.col("txn.appId").isNotNull()
-            & (F.col("txn.appId") == app_id)
-        )
-        .agg(F.max("txn.version").alias("v"))
-        .collect()
+    _target, actions = _py_actions(os.path.join(path, _LOG_DIR))
+    return max(
+        (
+            int(t["version"])
+            for _v, a in actions
+            for t in [a.get("txn")]
+            if t is not None
+            and t.get("appId") == app_id
+            and t.get("version") is not None
+        ),
+        default=-1,
     )
-    return -1 if not row or row[0]["v"] is None else int(row[0]["v"])
 
 
 # ---------------------------------------------------------------------
@@ -2882,12 +2591,7 @@ def append_to_delta(
 
     def resolve():
         target, actions = _py_actions(log_dir)
-        meta = proto = None
-        for _v, a in actions:
-            if a.get("metaData") is not None:
-                meta = a["metaData"]
-            elif a.get("protocol") is not None:
-                proto = a["protocol"]
+        proto, meta = _py_latest(actions)
         if meta is None:
             raise DeltaProtocolError("log has no metaData action")
         proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -3341,8 +3045,7 @@ class _TableCtx:
         self.rel_of_abs = {v: k for k, v in self.abs_of.items()}
 
     def dv_of(self, rel):
-        d = self.live[rel].get("deletionVector")
-        return d if d is not None and d.get("storageType") else None
+        return _dv_desc(self.live[rel])
 
     def phys_sel(self, frame):
         """Physical spelling for staged rewrites/cdc files under
@@ -3583,12 +3286,7 @@ def _dml_from_delta(
 
     def resolve():
         target, actions = _py_actions(log_dir)
-        meta = proto = None
-        for _v, a in actions:
-            if a.get("metaData") is not None:
-                meta = a["metaData"]
-            elif a.get("protocol") is not None:
-                proto = a["protocol"]
+        proto, meta = _py_latest(actions)
         if meta is None:
             raise DeltaProtocolError("log has no metaData action")
         proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -4285,12 +3983,7 @@ def merge_into_delta(
 
     def resolve():
         target, actions = _py_actions(log_dir)
-        meta = proto = None
-        for _v, a in actions:
-            if a.get("metaData") is not None:
-                meta = a["metaData"]
-            elif a.get("protocol") is not None:
-                proto = a["protocol"]
+        proto, meta = _py_latest(actions)
         if meta is None:
             raise DeltaProtocolError("log has no metaData action")
         proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -4918,12 +4611,7 @@ def restore_delta(
 
     def resolve():
         target, actions = _py_actions(log_dir)
-        meta = proto = None
-        for _v, a in actions:
-            if a.get("metaData") is not None:
-                meta = a["metaData"]
-            elif a.get("protocol") is not None:
-                proto = a["protocol"]
+        proto, meta = _py_latest(actions)
         if meta is None:
             raise DeltaProtocolError("log has no metaData action")
         proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -5212,12 +4900,7 @@ def vacuum_delta(
     if not os.path.isdir(log_dir):
         raise FileNotFoundError(f"{path} has no _delta_log")
     _t, actions = _py_actions(log_dir)
-    meta = proto = None
-    for _v, a in actions:
-        if a.get("metaData") is not None:
-            meta = a["metaData"]
-        elif a.get("protocol") is not None:
-            proto = a["protocol"]
+    proto, meta = _py_latest(actions)
     if meta is None:
         raise DeltaProtocolError("log has no metaData action")
     _py_check_protocol(
@@ -5405,12 +5088,7 @@ def optimize_delta(
 
     def resolve():
         target, actions = _py_actions(log_dir)
-        meta = proto = None
-        for _v, a in actions:
-            if a.get("metaData") is not None:
-                meta = a["metaData"]
-            elif a.get("protocol") is not None:
-                proto = a["protocol"]
+        proto, meta = _py_latest(actions)
         if meta is None:
             raise DeltaProtocolError("log has no metaData action")
         proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -5653,12 +5331,7 @@ def describe_delta_detail(spark: SparkSession, path: str) -> DataFrame:
     if not os.path.isdir(log_dir):
         raise FileNotFoundError(f"{path} has no _delta_log")
     _t, actions = _py_actions(log_dir)
-    meta = proto = None
-    for _v, a in actions:
-        if a.get("metaData") is not None:
-            meta = a["metaData"]
-        elif a.get("protocol") is not None:
-            proto = a["protocol"]
+    proto, meta = _py_latest(actions)
     if meta is None:
         raise DeltaProtocolError("log has no metaData action")
     proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -5732,12 +5405,7 @@ def clone_delta(
             "new table (REPLACE is not supported)"
         )
     sv, actions = _py_actions(src_log)
-    meta = proto = None
-    for _v, a in actions:
-        if a.get("metaData") is not None:
-            meta = a["metaData"]
-        elif a.get("protocol") is not None:
-            proto = a["protocol"]
+    proto, meta = _py_latest(actions)
     if meta is None:
         raise DeltaProtocolError("source log has no metaData action")
     proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_4handling_listings_spark.sources.readers import open_parquet
 from etl_pipeline_4handling_listings_spark.sources.store import FILE_STATS
 
 
@@ -60,7 +61,7 @@ def build_file_stats(
 
     Returns the number of files indexed.
     """
-    df = spark.read.parquet(path)
+    df = open_parquet(spark, path)
     aggs = []
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
@@ -100,7 +101,7 @@ def read_with_skip(
             stats = json.load(f)
     except FileNotFoundError:
         stats = None
-    base = spark.read.parquet(path)
+    base = open_parquet(spark, path)
     dtype = dict(base.dtypes).get(col)
     if stats is not None:
         # prune against the LIVE file list, never the index alone:
@@ -197,7 +198,7 @@ def build_file_bloom(
         _positions,
     )
 
-    df = spark.read.parquet(path)
+    df = open_parquet(spark, path)
     c = F.col(col)
     pos = F.explode(
         F.when(
@@ -264,7 +265,7 @@ def read_with_skip_eq(
     cast to the column's type — ``xxhash64`` of the long 7 and the
     string '7' differ.
     """
-    base = spark.read.parquet(path)
+    base = open_parquet(spark, path)
     entry = None
     if value is not None:
         try:

@@ -121,6 +121,7 @@ from pyspark.sql.types import StructField, StructType
 from etl_pipeline_4handling_listings_spark.arrowframe import arrow_frame
 from etl_pipeline_4handling_listings_spark.operators.merge import Cond, merge_upsert
 from etl_pipeline_4handling_listings_spark.sources.hivepath import hive_part_str
+from etl_pipeline_4handling_listings_spark.sources.readers import read_table
 
 _POINTER = "_CURRENT"
 _PROTOCOL = "_PROTOCOL"
@@ -2334,7 +2335,7 @@ class MergeStore:
                     "convert without partition_by, or rewrite the "
                     "data partitioned first"
                 )
-        schema = spark.read.format(fmt).load(path).schema
+        schema = read_table(spark, path, fmt=fmt).schema
         if not store._claim_version(
             "v00000", expiry_s=300.0, extra={"operation": "convert"}
         ):
@@ -3396,17 +3397,20 @@ class MergeStore:
         try:
             # one pass writes BOTH outputs: positions for the sidecar
             # and the post-update images for the appended files
-            matched.select(
+            out = matched.select(
                 "_dv_file",
                 "_dv_pos",
                 *[
                     (assigns[c].alias(c) if c in assigns else F.col(c))
                     for c in data_cols
                 ],
-            ).write.mode("overwrite").parquet(scratch)
+            )
+            out.write.mode("overwrite").parquet(scratch)
         except (OSError, AnalysisException):
             return False, None, None
-        snap = self.spark.read.parquet(scratch)
+        # read back under the schema just written: the scratch dir is
+        # new on every call, so inference would run each time
+        snap = self.spark.read.schema(out.schema).parquet(scratch)
         n = snap.count()
         if n == 0:
             return None, None, None

@@ -12,6 +12,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline_4handling_listings_spark.sources.readers import read_table
+
 
 def write_export(
     df: DataFrame,
@@ -96,7 +98,7 @@ def compact(
         for f in files:
             size_bytes += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(size_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.format(fmt).load(path)
+    df = read_table(spark, path, fmt=fmt)
     tmp = path.rstrip("/") + "._compact_tmp"
     (
         df.coalesce(n_files)

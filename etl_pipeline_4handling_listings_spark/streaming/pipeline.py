@@ -25,7 +25,9 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline_4handling_listings_spark.arrowframe import arrow_frame
 from etl_pipeline_4handling_listings_spark.operators.dedup import latest_record
+from etl_pipeline_4handling_listings_spark.sources.readers import open_parquet
 from etl_pipeline_4handling_listings_spark.sources.store import MergeStore
 
 
@@ -453,8 +455,8 @@ def _versioned_merge_sink(
             else []
         )
         if versions:
-            current = spark.read.parquet(
-                os.path.join(path, f"v{versions[-1]}")
+            current = open_parquet(
+                spark, os.path.join(path, f"v{versions[-1]}")
             )
             merged = merge_states(merged, current)
         tmp = os.path.join(path, f"_tmp_v{batch_id}")
@@ -648,8 +650,8 @@ def foreach_batch_lateness_profile(
             else []
         )
         if versions:
-            current = spark.read.parquet(
-                os.path.join(path, f"v{versions[-1]}")
+            current = open_parquet(
+                spark, os.path.join(path, f"v{versions[-1]}")
             )
         hw_prev = (
             None
@@ -690,8 +692,10 @@ def foreach_batch_lateness_profile(
             )
             for i, lb in enumerate(labels)
         ]
-        merged = spark.createDataFrame(
-            rows, "band string, n_events long, max_late_us long, hw_us long"
+        merged = arrow_frame(
+            spark,
+            rows,
+            "band string, n_events long, max_late_us long, hw_us long",
         )
         # max_late_us belongs to the profile, not a band — carry the
         # running max on every row (merge = max), like hw_us
@@ -709,7 +713,8 @@ def foreach_batch_lateness_profile(
                 )
                 for (lb, n, m, hw) in rows
             ]
-            merged = spark.createDataFrame(
+            merged = arrow_frame(
+                spark,
                 rows,
                 "band string, n_events long, max_late_us long, hw_us long",
             )

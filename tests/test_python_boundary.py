@@ -75,13 +75,13 @@ def test_arrow_frame_rejects_mistyped_value(spark):
 
 
 def test_no_list_built_frames_outside_the_helper():
-    """Guard: ``createDataFrame`` in the engine's sources, operators
-    and plans goes through ``arrow_frame`` only, so the
-    one-Python-task-per-core-per-consumption list path cannot come
-    back."""
-    files = [PKG / "arrowframe.py"] + sorted(
+    """Guard: ``createDataFrame`` in the engine's sources, operators,
+    plans, streaming and query registry goes through ``arrow_frame``
+    only, so the one-Python-task-per-core-per-consumption list path
+    cannot come back."""
+    files = [PKG / "arrowframe.py", PKG / "queries.py"] + sorted(
         p
-        for sub in ("sources", "operators", "plans")
+        for sub in ("sources", "operators", "plans", "streaming")
         for p in (PKG / sub).rglob("*.py")
     )
     offenders = []
